@@ -21,8 +21,17 @@ import org.apache.spark.sql.DataFrame
   */
 object Materialize {
 
+  /** One registry entry. `dir` runs the build at most once; it runs on the
+    * first caller's thread OUTSIDE the map's bin lock, so a build may
+    * itself request other keys (q153's co-edges build reads `userItems`
+    * through this registry), and callers of the same key wait on the
+    * entry, not on the map. A build that throws leaves `dir` unset. */
+  private final class Entry(build: () => String) {
+    lazy val dir: String = build()
+  }
+
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
   private val tempDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -62,28 +71,21 @@ object Materialize {
       entries.mkString("|").getBytes("UTF-8")).toString
   }
 
-  /** Whether `key` is already materialized in THIS process. Lets a
-    * builder that depends on other registry entries pre-warm them only
-    * on its own cold path: a computeIfAbsent nested inside another on
-    * this map throws ConcurrentHashMap's "Recursive update" when the
-    * inner key is absent (it must mutate mid-compute), but an inner hit
-    * is read-only and safe — so force dependencies BEFORE entering the
-    * outer builder, and only when the outer key is cold (doing it
-    * unconditionally puts 3 eager reader constructions on the warm path
-    * of every consumer — measured +0.17 s/run on q209/q215). */
-  def has(key: String): Boolean = cache.containsKey(key)
-
   /** The parquet dir holding `build`'s result for `key`, writing it on
     * first request. `partitionCols` hive-partitions the write (the q185
     * index layout); empty = plain parquet. */
   def parquetDir(key: String, prefix: String, partitionCols: Seq[String] = Nil)
-                (build: => DataFrame): String =
-    cache.computeIfAbsent(key, { _ =>
+                (build: => DataFrame): String = {
+    val entry = cache.computeIfAbsent(key, _ => new Entry(() => {
       val out = java.nio.file.Files.createTempDirectory(prefix).toString
       tempDirs.add(out)
       val w = build.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(out)
       out
-    })
+    }))
+    // a failed build leaves no entry behind: the next request rebuilds
+    try entry.dir
+    catch { case e: Throwable => cache.remove(key, entry); throw e }
+  }
 }

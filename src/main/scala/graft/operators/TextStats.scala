@@ -416,8 +416,8 @@ object TextStats extends QueryModule {
     * once per docs snapshot; scoring reads the cached model frames, so
     * even the first consumer pays training exactly once. */
   private[graft] def nbScoresCached(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the model artifacts BEFORE entering the scores build:
-    // Materialize's computeIfAbsent must not nest (recursive-update guard)
+    // the model frames come from their own registry entry, so scoring
+    // never retrains them
     val (model, stats) = nbModelFramesCached(spark, dir)
     spark.read.parquet(Materialize.parquetDir(
       s"nb-scores:$dir@${Materialize.snapshot(s"$dir/documents.parquet")}",
@@ -1407,23 +1407,14 @@ object TextStats extends QueryModule {
   private def bpeVocabStoreDir(spark: SparkSession, dir: String): String = {
     val snap = Materialize.snapshot(s"$dir/documents.parquet")
     val key = s"bpe-vocab-gens3:$dir@$snap"
-    def g1 = bpeMergesCached(spark, dir, "gen01of4", _.filter(col("doc_id") % 4 < 2))
-    def g2 = bpeMergesCached(spark, dir, "gen1of4", _.filter(col("doc_id") % 4 =!= 3))
-    def g3 = bpeTrain(spark, dir) // also Materialize-backed (q203's table)
-    // Cold path only: force the slice trainings BEFORE entering the
-    // store's own parquetDir builder — bpeMergesCached is itself a
-    // Materialize entry, and a computeIfAbsent nested inside another on
-    // the same registry throws "Recursive update" when the inner key is
-    // cold (latent in the r17 two-gen store, masked by warm-cache
-    // order). On the warm path the builder never runs, so the inner
-    // calls must stay lazy: forcing them unconditionally put 3 reader
-    // constructions on every q209/q215 invocation (+0.17 s/run, caught
-    // by the r18 gate's same-code witness).
-    if (!Materialize.has(key)) { g1; g2; g3 }
+    // the generations are Materialize entries too, built (on the cold
+    // path only) from inside this store's build
     Materialize.parquetDir(key, "graft-bpe-vocab-", partitionCols = Seq("gen")) {
-      g1.withColumn("gen", lit(1))
-        .unionAll(g2.withColumn("gen", lit(2)))
-        .unionAll(g3.withColumn("gen", lit(3)))
+      bpeMergesCached(spark, dir, "gen01of4", _.filter(col("doc_id") % 4 < 2))
+        .withColumn("gen", lit(1))
+        .unionAll(bpeMergesCached(spark, dir, "gen1of4", _.filter(col("doc_id") % 4 =!= 3))
+          .withColumn("gen", lit(2)))
+        .unionAll(bpeTrain(spark, dir).withColumn("gen", lit(3))) // q203's table
     }
   }
 

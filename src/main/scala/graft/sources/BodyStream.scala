@@ -288,7 +288,14 @@ class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int, filesPerPartiti
     * range still maps to the same files even after processed bodies were
     * archived away. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val listing = BodyStream.list(dir)
+    // Fenced listing. The frontend renames bodies into place in name order,
+    // but one directory pass racing those renames can return body N+k
+    // without body N, and admitting past that gap would trip the
+    // high-water-mark check on the next trigger. Every name at or below
+    // the newest name of a FINISHED pass was renamed in before that pass
+    // ended, so a second pass holds all of them: admit only those.
+    val listing = BodyStream.list(dir).lastOption
+      .fold(Vector.empty[String])(fence => BodyStream.list(dir).takeWhile(_ <= fence))
     cachedListing = listing
     val s = start.asInstanceOf[BodySeqOffset]
     val startIdx = BodyStream.boundaryIndex(listing, s, dir)

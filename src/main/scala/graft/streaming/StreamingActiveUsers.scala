@@ -3,9 +3,8 @@ package graft.streaming
 import java.time.Duration
 
 import graft.functions.KmvAgg
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** One activity observation: a user seen at event time `tsUs` (micros). */
 final case class ActivityRow(user_id: Long, tsUs: Long)
@@ -46,21 +45,18 @@ object StreamingActiveUsers {
   }
 
   private final class DailyKmvProcessor(k: Int, ttl: TTLConfig)
-      extends StatefulProcessor[Long, ActivityRow, DaySketch] {
-    @transient private var state: ValueState[Array[Long]] = _
+      extends ValueStateFold[Long, ActivityRow, Array[Long], DaySketch]("kmv",
+        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]](), ttl) {
     @transient private lazy val agg = new KmvAgg(k)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[Array[Long]]("kmv",
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]](), ttl)
+    protected def zero = agg.zero
 
-    override def handleInputRows(
-        key: Long, rows: Iterator[ActivityRow],
-        timers: TimerValues): Iterator[DaySketch] = {
-      var sk = if (state.exists()) state.get() else agg.zero
+    protected def fold(key: Long, s: Array[Long], rows: Iterator[ActivityRow],
+                       emit: DaySketch => Unit) = {
+      var sk = s
       rows.foreach(r => sk = agg.reduce(sk, hash60(r.user_id)))
-      state.update(sk)
-      Iterator.single(DaySketch(key, sk, sk.length))
+      emit(DaySketch(key, sk, sk.length))
+      sk
     }
   }
 
@@ -70,11 +66,8 @@ object StreamingActiveUsers {
   def daySketches(activity: Dataset[ActivityRow], k: Int = 4096,
                   ttl: Option[Duration] = None): Dataset[DaySketch] = {
     import activity.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    activity
-      .groupByKey(_.tsUs / 86400000000L)
-      .transformWithState(new DailyKmvProcessor(k, ttlConf), timeMode, OutputMode.Append())
+    KeyedState.transform(activity.groupByKey(_.tsUs / KeyedState.UsPerDay),
+      OutputMode.Append(), ttl)(new DailyKmvProcessor(k, _))
   }
 
   /** Folds final day panes into the q141 view: per day, (dau, wau, mau)

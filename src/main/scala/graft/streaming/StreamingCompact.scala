@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** One changelog row for a keyed entity; `tsUs` is event time in micros. */
 final case class ChangeRow(user_id: Long, event_id: Long, event_type: String,
@@ -39,26 +38,21 @@ final case class CompactUpdate(user_id: Long, last_event_id: Long, last_type: St
 object StreamingCompact {
 
   private final class CompactProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, ChangeRow, CompactUpdate] {
-    @transient private var state: ValueState[CompactState] = _
+      extends ValueStateFold[Long, ChangeRow, CompactState, CompactUpdate](
+        "compact", Encoders.product[CompactState], ttl) {
+    protected def zero = CompactState(Long.MinValue, null, 0.0, Long.MinValue, 0L)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[CompactState]("compact",
-        Encoders.product[CompactState], ttl)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[ChangeRow],
-        timers: TimerValues): Iterator[CompactUpdate] = {
-      var s = if (state.exists()) state.get()
-              else CompactState(Long.MinValue, null, 0.0, Long.MinValue, 0L)
+    protected def fold(key: Long, s0: CompactState, rows: Iterator[ChangeRow],
+                       emit: CompactUpdate => Unit) = {
+      var s = s0
       rows.foreach { r =>
         val wins = r.tsUs > s.us || (r.tsUs == s.us && r.event_id > s.eventId)
         s =
           if (wins) CompactState(r.event_id, r.event_type, r.value, r.tsUs, s.nVersions + 1)
           else s.copy(nVersions = s.nVersions + 1)
       }
-      state.update(s)
-      Iterator.single(CompactUpdate(key, s.eventId, s.eventType, s.value, s.us, s.nVersions))
+      emit(CompactUpdate(key, s.eventId, s.eventType, s.value, s.us, s.nVersions))
+      s
     }
   }
 
@@ -68,10 +62,7 @@ object StreamingCompact {
   def compact(changes: Dataset[ChangeRow],
               ttl: Option[Duration] = None): Dataset[CompactUpdate] = {
     import changes.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    changes
-      .groupByKey(_.user_id)
-      .transformWithState(new CompactProcessor(ttlConf), timeMode, OutputMode.Append())
+    KeyedState.transform(changes.groupByKey(_.user_id), OutputMode.Append(), ttl)(
+      new CompactProcessor(_))
   }
 }

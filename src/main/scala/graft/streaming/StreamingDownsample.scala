@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** One sample routed to its retention bucket; `bucketUs` is the 6 h-aligned
   * bucket start in micros (assigned per-row upstream, no shuffle). */
@@ -39,17 +38,13 @@ final case class OhlcUpdate(event_type: String, bucket_us: Long,
 object StreamingDownsample {
 
   private final class OhlcProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[(String, Long), BucketSample, OhlcUpdate] {
-    @transient private var state: ValueState[OhlcState] = _
+      extends ValueStateFold[(String, Long), BucketSample, OhlcState, OhlcUpdate](
+        "ohlc", Encoders.product[OhlcState], ttl) {
+    protected def zero: OhlcState = null
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[OhlcState]("ohlc",
-        Encoders.product[OhlcState], ttl)
-
-    override def handleInputRows(
-        key: (String, Long), rows: Iterator[BucketSample],
-        timers: TimerValues): Iterator[OhlcUpdate] = {
-      var s: OhlcState = if (state.exists()) state.get() else null
+    protected def fold(key: (String, Long), s0: OhlcState, rows: Iterator[BucketSample],
+                       emit: OhlcUpdate => Unit) = {
+      var s = s0
       rows.foreach { r =>
         s =
           if (s == null)
@@ -68,8 +63,8 @@ object StreamingDownsample {
               math.max(s.high, r.value), math.min(s.low, r.value), s.n + 1)
           }
       }
-      state.update(s)
-      Iterator.single(OhlcUpdate(key._1, key._2, s.open, s.high, s.low, s.close, s.n))
+      emit(OhlcUpdate(key._1, key._2, s.open, s.high, s.low, s.close, s.n))
+      s
     }
   }
 
@@ -78,10 +73,7 @@ object StreamingDownsample {
   def downsample(samples: Dataset[BucketSample],
                  ttl: Option[Duration] = None): Dataset[OhlcUpdate] = {
     import samples.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    samples
-      .groupByKey(r => (r.event_type, r.bucketUs))
-      .transformWithState(new OhlcProcessor(ttlConf), timeMode, OutputMode.Append())
+    KeyedState.transform(samples.groupByKey(r => (r.event_type, r.bucketUs)),
+      OutputMode.Append(), ttl)(new OhlcProcessor(_))
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** One stream row for distribution monitoring: a `group` (event type /
   * metric) observed at event time `tsUs` with an integer measurement
@@ -47,22 +46,23 @@ final case class DriftScore(group: String, day: Long, n_ref: Long,
   *    recipe, so a reader can compare streamed panes with batch reports.
   *
   * State per group is 2·nBins longs (reference + open day) — bounded, no
-  * raw values retained. Day sealing, micro-batch bridging, and the
-  * late-row contract (a row behind the open day increments `nLate` and
-  * drops) follow [[StreamingMeanShift]] exactly.
+  * raw values retained. Days seal by the [[DaySealFold]] rule.
   */
 object StreamingDrift {
 
-  private val usPerDay = 86400000000L
-
   private final class DriftProcessor(lo: Long, hi: Long, nBins: Int,
                                      relearnDays: Option[Int], ttl: TTLConfig)
-      extends StatefulProcessor[String, ValueTick, DriftScore] {
-    @transient private var state: ValueState[DriftState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[DriftState]("drift",
-        Encoders.product[DriftState], ttl)
+      extends DaySealFold[ValueTick, DriftState, DriftScore](
+        "drift", Encoders.product[DriftState], ttl) {
+    protected def zero = DriftState(Seq.empty, Long.MinValue, Long.MinValue,
+      Seq.fill(nBins)(0L), 0L)
+    protected def tsUs(t: ValueTick) = t.tsUs
+    protected def openDay(s: DriftState) = s.curDay
+    protected def late(s: DriftState) = s.copy(nLate = s.nLate + 1)
+    protected def enter(s: DriftState, day: Long, t: ValueTick) = {
+      val b = bin(t.cents)
+      s.copy(curDay = day, curHist = s.curHist.updated(b, s.curHist(b) + 1))
+    }
 
     private def bin(v: Long): Int = {
       val clamped = math.max(lo, math.min(hi, v))
@@ -94,41 +94,22 @@ object StreamingDrift {
       DriftScore(key, day, nRef, nDay, d, psi, d > crit)
     }
 
-    override def handleInputRows(
-        key: String, rows: Iterator[ValueTick],
-        timers: TimerValues): Iterator[DriftScore] = {
-      val zero = Seq.fill(nBins)(0L)
-      var s = if (state.exists()) state.get()
-              else DriftState(Seq.empty, Long.MinValue, Long.MinValue, zero, 0L)
-      val out = Seq.newBuilder[DriftScore]
-      rows.toArray.sortBy(_.tsUs).foreach { t =>
-        val d = t.tsUs / usPerDay
-        if (d < s.curDay) s = s.copy(nLate = s.nLate + 1)
+    // the sealed day becomes the reference if none exists, otherwise it
+    // scores against the reference — and, with relearn enabled, REPLACES
+    // the reference once the epoch is relearnDays old (concept-drift-aware
+    // monitoring: the scored day becomes the new normal, so a PERMANENT
+    // regime change alarms once and then re-baselines instead of alarming
+    // forever; choose the horizon longer than any drift you must keep
+    // seeing)
+    protected def seal(key: String, s: DriftState, emit: DriftScore => Unit) = {
+      val adopt =
+        if (s.refHist.isEmpty) true
         else {
-          if (d > s.curDay && s.curDay != Long.MinValue) {
-            // seal curDay: it becomes the reference if none exists,
-            // otherwise it scores against the reference — and, with
-            // relearn enabled, REPLACES the reference once the epoch is
-            // relearnDays old (concept-drift-aware monitoring: the scored
-            // day becomes the new normal, so a PERMANENT regime change
-            // alarms once and then re-baselines instead of alarming
-            // forever; choose the horizon longer than any drift you must
-            // keep seeing)
-            if (s.refHist.isEmpty)
-              s = s.copy(refHist = s.curHist, refDay = s.curDay)
-            else {
-              out += score(key, s.curDay, s.refHist, s.curHist)
-              if (relearnDays.exists(r => s.curDay - s.refDay >= r))
-                s = s.copy(refHist = s.curHist, refDay = s.curDay)
-            }
-            s = s.copy(curHist = zero)
-          }
-          val h = s.curHist.updated(bin(t.cents), s.curHist(bin(t.cents)) + 1)
-          s = s.copy(curDay = d, curHist = h)
+          emit(score(key, s.curDay, s.refHist, s.curHist))
+          relearnDays.exists(r => s.curDay - s.refDay >= r)
         }
-      }
-      state.update(s)
-      out.result().iterator
+      val sealedRef = if (adopt) s.copy(refHist = s.curHist, refDay = s.curDay) else s
+      sealedRef.copy(curHist = Seq.fill(nBins)(0L))
     }
   }
 
@@ -147,11 +128,7 @@ object StreamingDrift {
     require(nBins >= 2 && hi > lo, "need a real bin layout")
     require(relearnDays.forall(_ > 0), "relearn horizon must be positive")
     import ticks.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    ticks
-      .groupByKey(_.group)
-      .transformWithState(new DriftProcessor(lo, hi, nBins, relearnDays, ttlConf),
-        timeMode, OutputMode.Append())
+    KeyedState.transform(ticks.groupByKey(_.group), OutputMode.Append(), ttl)(
+      new DriftProcessor(lo, hi, nBins, relearnDays, _))
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Per-group forecast state: the open day + count, and per weekday slot
   * the last CLOSED (epoch day, count) — 7 slots, the whole seasonal-naive
@@ -28,44 +27,29 @@ final case class ForecastEval(group: String, day: Long, actual: Long,
   * slot if the slot holds day−7, then takes the slot over. In-order input
   * reproduces the batch join's per-day (actual, predicted) pairs verbatim
   * minus each group's final, never-sealed day (spec-verified on real
-  * testdata). Same ordering/late-row contract as [[StreamingMeanShift]].
+  * testdata). Days seal by the [[DaySealFold]] rule.
   */
 object StreamingForecast {
 
-  private val usPerDay = 86400000000L
-
   private final class ForecastProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, GroupTick, ForecastEval] {
-    @transient private var state: ValueState[ForecastState] = _
+      extends DaySealFold[GroupTick, ForecastState, ForecastEval](
+        "forecast", Encoders.product[ForecastState], ttl) {
+    protected def zero = ForecastState(Long.MinValue, 0L, Seq.fill(7)(Long.MinValue),
+      Seq.fill(7)(0L), 0L)
+    protected def tsUs(t: GroupTick) = t.tsUs
+    protected def openDay(s: ForecastState) = s.curDay
+    protected def late(s: ForecastState) = s.copy(nLate = s.nLate + 1)
+    protected def enter(s: ForecastState, day: Long, t: GroupTick) =
+      s.copy(curDay = day, curCount = s.curCount + 1)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[ForecastState]("forecast",
-        Encoders.product[ForecastState], ttl)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[GroupTick],
-        timers: TimerValues): Iterator[ForecastEval] = {
-      var s = if (state.exists()) state.get()
-              else ForecastState(Long.MinValue, 0L, Seq.fill(7)(Long.MinValue),
-                Seq.fill(7)(0L), 0L)
-      val out = Seq.newBuilder[ForecastEval]
-      rows.toArray.sortBy(_.tsUs).foreach { t =>
-        val d = t.tsUs / usPerDay
-        if (d < s.curDay) s = s.copy(nLate = s.nLate + 1)
-        else if (d == s.curDay || s.curDay == Long.MinValue)
-          s = s.copy(curDay = d, curCount = s.curCount + 1)
-        else {
-          val dow = (s.curDay % 7).toInt
-          if (s.lastDay(dow) == s.curDay - 7)
-            out += ForecastEval(key, s.curDay, s.curCount, s.lastCount(dow),
-              math.abs(s.curCount - s.lastCount(dow)))
-          s = ForecastState(d, 1L,
-            s.lastDay.updated(dow, s.curDay),
-            s.lastCount.updated(dow, s.curCount), s.nLate)
-        }
-      }
-      state.update(s)
-      out.result().iterator
+    // score the sealed day against its weekday slot, then take the slot over
+    protected def seal(key: String, s: ForecastState, emit: ForecastEval => Unit) = {
+      val dow = (s.curDay % 7).toInt
+      if (s.lastDay(dow) == s.curDay - 7)
+        emit(ForecastEval(key, s.curDay, s.curCount, s.lastCount(dow),
+          math.abs(s.curCount - s.lastCount(dow))))
+      s.copy(curCount = 0L, lastDay = s.lastDay.updated(dow, s.curDay),
+        lastCount = s.lastCount.updated(dow, s.curCount))
     }
   }
 
@@ -74,10 +58,7 @@ object StreamingForecast {
   def forecastEvals(ticks: Dataset[GroupTick],
                     ttl: Option[Duration] = None): Dataset[ForecastEval] = {
     import ticks.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    ticks
-      .groupByKey(_.group)
-      .transformWithState(new ForecastProcessor(ttlConf), timeMode, OutputMode.Append())
+    KeyedState.transform(ticks.groupByKey(_.group), OutputMode.Append(), ttl)(
+      new ForecastProcessor(_))
   }
 }

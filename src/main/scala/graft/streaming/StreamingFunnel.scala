@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** One funnel-relevant event for a user. `tsUs` is event time in epoch
   * micros — the unit the batch pipeline normalizes `events.ts` to. */
@@ -48,20 +47,14 @@ object StreamingFunnel {
   val DefaultWindowUs: Long = 7L * 86400 * 1000000
 
   private final class FunnelProcessor(windowUs: Long, ttl: TTLConfig)
-      extends StatefulProcessor[Long, FunnelEvent, FunnelProgress] {
-    @transient private var state: ValueState[FunnelState] = _
+      extends ValueStateFold[Long, FunnelEvent, FunnelState, FunnelProgress](
+        "funnel", Encoders.product[FunnelState], ttl) {
+    protected def zero = FunnelState(-1L, -1L, -1L, Long.MinValue, 0L)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[FunnelState]("funnel",
-        Encoders.product[FunnelState], ttl)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[FunnelEvent],
-        timers: TimerValues): Iterator[FunnelProgress] = {
-      val batch = rows.toArray.sortBy(e => (e.tsUs, e.event_type))
-      var s = if (state.exists()) state.get()
-              else FunnelState(-1L, -1L, -1L, Long.MinValue, 0L)
-      batch.foreach { e =>
+    protected def fold(key: Long, s0: FunnelState, rows: Iterator[FunnelEvent],
+                       emit: FunnelProgress => Unit) = {
+      var s = s0
+      rows.toArray.sortBy(e => (e.tsUs, e.event_type)).foreach { e =>
         if (e.tsUs < s.hwmUs) {
           s = s.copy(nLate = s.nLate + 1)
         } else {
@@ -76,12 +69,11 @@ object StreamingFunnel {
           s = s.copy(hwmUs = math.max(s.hwmUs, e.tsUs))
         }
       }
-      state.update(s)
       val stage = if (s.t3Us >= 0) 3 else if (s.t2Us >= 0) 2
                   else if (s.t1Us >= 0) 1 else 0
       def opt(v: Long) = if (v >= 0) Some(v) else None
-      Iterator.single(FunnelProgress(key, stage,
-        opt(s.t1Us), opt(s.t2Us), opt(s.t3Us), s.nLate))
+      emit(FunnelProgress(key, stage, opt(s.t1Us), opt(s.t2Us), opt(s.t3Us), s.nLate))
+      s
     }
   }
 
@@ -94,12 +86,8 @@ object StreamingFunnel {
                       windowUs: Long = DefaultWindowUs,
                       ttl: Option[Duration] = None): Dataset[FunnelProgress] = {
     import events.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor(windowUs, ttlConf),
-        timeMode, OutputMode.Update())
+    KeyedState.transform(events.groupByKey(_.user_id), OutputMode.Update(), ttl)(
+      new FunnelProcessor(windowUs, _))
   }
 
   /** Adapter from the `events` table shape (ts TIMESTAMP) to the typed

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, TimeMode}
 
 /** One sample of a keyed series, event time in micros. */
 final case class SeriesSample(name: String, tsUs: Long, value: Double)
@@ -44,23 +43,18 @@ object StreamingGapFill {
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
 
   private final class GapProcessor(step: Long)
-      extends StatefulProcessor[String, SeriesSample, GridFill] {
-    @transient private var state: ValueState[LastSample] = _
+      extends ValueStateFold[String, SeriesSample, LastSample, GridFill](
+        "last", Encoders.product[LastSample], TTLConfig.NONE) {
+    protected def zero: LastSample = null
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[LastSample]("last",
-        Encoders.product[LastSample], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[SeriesSample],
-        timers: TimerValues): Iterator[GridFill] = {
-      var s = if (state.exists()) state.get() else null
-      val out = scala.collection.mutable.ArrayBuffer.empty[GridFill]
+    protected def fold(key: String, s0: LastSample, rows: Iterator[SeriesSample],
+                       emit: GridFill => Unit) = {
+      var s = s0
       rows.toSeq.sortBy(r => (r.tsUs, r.value)).foreach { r =>
         if (s == null) {
           // batch's grid starts at ceil(first sample): only an exactly
           // aligned first sample carries a grid point of its own
-          if (r.tsUs % step == 0) out += GridFill(key, r.tsUs, round6(r.value))
+          if (r.tsUs % step == 0) emit(GridFill(key, r.tsUs, round6(r.value)))
           s = LastSample(r.tsUs, r.value)
         } else if (r.tsUs > s.tsUs) {
           var g = (s.tsUs / step + 1) * step // first aligned point after prev
@@ -69,14 +63,13 @@ object StreamingGapFill {
               if (g == r.tsUs) r.value // on-sample: exact, batch's pt = tus rule
               else s.value + (r.value - s.value) *
                 ((g - s.tsUs).toDouble / (r.tsUs - s.tsUs).toDouble)
-            out += GridFill(key, g, round6(v))
+            emit(GridFill(key, g, round6(v)))
             g += step
           }
           s = LastSample(r.tsUs, r.value)
         } // ts ≤ high-water mark: late or duplicate — dropped by contract
       }
-      if (s != null) state.update(s)
-      out.iterator
+      s
     }
   }
 

@@ -140,10 +140,9 @@ object StreamingGrowth {
     forget.foreach(f => require(f.toDays > lapse.toLong,
       s"forget horizon $f must exceed the $lapse-day lapse window"))
     import ticks.sparkSession.implicits._
-    val ttl = forget.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
     ticks
       .groupByKey(_.user_id)
-      .transformWithState(new GrowthProcessor(lapse, ttl),
+      .transformWithState(new GrowthProcessor(lapse, KeyedState.ttlConfig(forget)),
         TimeMode.EventTime(), OutputMode.Append())
   }
 

@@ -1,8 +1,10 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TTLConfig,
+  TimeMode, TimerValues}
 
 /** One token occurrence in a keyed stream (e.g. group = metric name or
   * language bucket, token = word/label value/user agent). */
@@ -34,10 +36,40 @@ final case class SsCounter(count: Long, error: Long)
   */
 object StreamingHeavyHitters {
 
+  /** Applies one micro-batch's per-token counts to the space-saving
+    * `counters` (at most `capacity` entries) and returns the tracked set.
+    * Tokens apply in ascending order, so eviction ties are deterministic;
+    * only touched entries are written back (dirty set), so store writes
+    * are O(distinct tokens in batch), not O(capacity). */
+  private[streaming] def offer(counters: MapState[String, SsCounter],
+                               batchCounts: collection.Map[String, Long],
+                               capacity: Int): mutable.HashMap[String, SsCounter] = {
+    // load the tracked set once; it is bounded by `capacity`
+    val tracked = mutable.HashMap.empty[String, SsCounter]
+    counters.iterator().foreach { case (t, c) => tracked.update(t, c) }
+    val dirty = mutable.HashSet.empty[String]
+    batchCounts.toSeq.sortBy(_._1).foreach { case (token, n) =>
+      tracked.get(token) match {
+        case Some(c) => tracked.update(token, c.copy(count = c.count + n))
+        case None if tracked.size < capacity =>
+          tracked.update(token, SsCounter(n, 0L))
+        case None =>
+          // evict the minimum-count entry (ties: token asc, determinism);
+          // the newcomer inherits its count as the overshoot bound
+          val (minTok, minC) = tracked.minBy { case (t, c) => (c.count, t) }
+          tracked.remove(minTok)
+          counters.removeKey(minTok)
+          tracked.update(token, SsCounter(minC.count + n, minC.count))
+      }
+      dirty.add(token)
+    }
+    dirty.foreach(t => tracked.get(t).foreach(c => counters.updateValue(t, c)))
+    tracked
+  }
+
   private final class SpaceSavingProcessor(capacity: Int, k: Int)
       extends StatefulProcessor[String, TokenEvent, HeavyHitter] {
-    @transient private var counters:
-      org.apache.spark.sql.streaming.MapState[String, SsCounter] = _
+    @transient private var counters: MapState[String, SsCounter] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       counters = getHandle.getMapState[String, SsCounter](
@@ -47,31 +79,9 @@ object StreamingHeavyHitters {
         group: String, rows: Iterator[TokenEvent],
         timers: TimerValues): Iterator[HeavyHitter] = {
       // batch-local pre-aggregation: one state touch per DISTINCT token
-      val batchCounts = scala.collection.mutable.HashMap.empty[String, Long]
+      val batchCounts = mutable.HashMap.empty[String, Long]
       rows.foreach(r => batchCounts.update(r.token, batchCounts.getOrElse(r.token, 0L) + 1L))
-      // load the tracked set once; it is bounded by `capacity`
-      val tracked = scala.collection.mutable.HashMap.empty[String, SsCounter]
-      counters.iterator().foreach { case (t, c) => tracked.update(t, c) }
-      // deterministic apply order (token asc) so eviction ties are stable;
-      // only touched entries are written back (dirty set), so store writes
-      // are O(distinct tokens in batch), not O(capacity)
-      val dirty = scala.collection.mutable.HashSet.empty[String]
-      batchCounts.toSeq.sortBy(_._1).foreach { case (token, n) =>
-        tracked.get(token) match {
-          case Some(c) => tracked.update(token, c.copy(count = c.count + n))
-          case None if tracked.size < capacity =>
-            tracked.update(token, SsCounter(n, 0L))
-          case None =>
-            // evict the minimum-count entry (ties: token asc, determinism);
-            // the newcomer inherits its count as the overshoot bound
-            val (minTok, minC) = tracked.minBy { case (t, c) => (c.count, t) }
-            tracked.remove(minTok)
-            counters.removeKey(minTok)
-            tracked.update(token, SsCounter(minC.count + n, minC.count))
-        }
-        dirty.add(token)
-      }
-      dirty.foreach(t => tracked.get(t).foreach(c => counters.updateValue(t, c)))
+      val tracked = offer(counters, batchCounts, capacity)
       // snapshot: top-k by estimated count (ties: token asc)
       tracked.toSeq.sortBy { case (t, c) => (-c.count, t) }.take(k).iterator
         .zipWithIndex.map { case ((t, c), i) =>

@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Cumulative bucket counts for one (metric, hour) — the whole state of a
   * Prometheus histogram series: `counts(i)` pairs with
@@ -59,25 +58,21 @@ object StreamingHistogramQuantile {
   }
 
   private final class HistProcessor(q: Double, ttl: TTLConfig)
-      extends StatefulProcessor[(String, Long), CounterSample, HistQuantile] {
-    @transient private var state: ValueState[HistCounts] = _
+      extends ValueStateFold[(String, Long), CounterSample, HistCounts, HistQuantile](
+        "hist", Encoders.product[HistCounts], ttl) {
+    private def buckets = graft.operators.EventAnalytics.HistBuckets
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[HistCounts]("hist", Encoders.product[HistCounts], ttl)
+    protected def zero = HistCounts(Array.fill(buckets.length + 1)(0L))
 
-    override def handleInputRows(
-        key: (String, Long), rows: Iterator[CounterSample],
-        timers: TimerValues): Iterator[HistQuantile] = {
-      val buckets = graft.operators.EventAnalytics.HistBuckets
-      val counts = if (state.exists()) state.get().counts
-                   else Array.fill(buckets.length + 1)(0L)
+    protected def fold(key: (String, Long), s: HistCounts, rows: Iterator[CounterSample],
+                       emit: HistQuantile => Unit) = {
+      val counts = s.counts
       rows.foreach { r =>
         val i = buckets.indexWhere(r.value <= _)
         counts(if (i < 0) buckets.length else i) += 1
       }
-      state.update(HistCounts(counts))
-      Iterator.single(
-        HistQuantile(key._1, key._2, counts.sum, quantileOf(counts, q)))
+      emit(HistQuantile(key._1, key._2, counts.sum, quantileOf(counts, q)))
+      HistCounts(counts)
     }
   }
 
@@ -90,11 +85,8 @@ object StreamingHistogramQuantile {
   def quantiles(samples: Dataset[CounterSample], q: Double = 0.95,
                 ttl: Option[Duration] = None): Dataset[HistQuantile] = {
     import samples.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    samples
-      .filter(_.value >= 0)
-      .groupByKey(s => (s.name, s.tsUs / HourUs * HourUs))
-      .transformWithState(new HistProcessor(q, ttlConf), timeMode, OutputMode.Update())
+    KeyedState.transform(
+      samples.filter(_.value >= 0).groupByKey(s => (s.name, s.tsUs / HourUs * HourUs)),
+      OutputMode.Update(), ttl)(new HistProcessor(q, _))
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Per-series smoothing state: the previous two levels and the trend of
   * prometheus' double-exponential recurrence, plus the (ts, value)
@@ -54,19 +53,14 @@ object StreamingHoltWinters {
 
   private final class HwProcessor(
       sf: Double, csf: Double, tf: Double, ctf: Double, ttl: TTLConfig)
-      extends StatefulProcessor[(String, Long), CounterSample, HwUpdate] {
-    @transient private var state: ValueState[HwState] = _
+      extends ValueStateFold[(String, Long), CounterSample, HwState, HwUpdate](
+        "hw", Encoders.product[HwState], ttl) {
+    protected def zero = HwState(0.0, 0.0, 0.0, 0L, -1L, 0.0, 0L)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[HwState]("hw", Encoders.product[HwState], ttl)
-
-    override def handleInputRows(
-        key: (String, Long), rows: Iterator[CounterSample],
-        timers: TimerValues): Iterator[HwUpdate] = {
-      val batch = rows.toArray.sortBy(s => (s.tsUs, s.value))
-      var s = if (state.exists()) state.get()
-              else HwState(0.0, 0.0, 0.0, 0L, -1L, 0.0, 0L)
-      batch.foreach { r =>
+    protected def fold(key: (String, Long), s0: HwState, rows: Iterator[CounterSample],
+                       emit: HwUpdate => Unit) = {
+      var s = s0
+      rows.toArray.sortBy(s => (s.tsUs, s.value)).foreach { r =>
         val late = s.n > 0L && (r.tsUs < s.lastTsUs ||
           (r.tsUs == s.lastTsUs && r.value < s.lastValue))
         if (late) {
@@ -85,13 +79,12 @@ object StreamingHoltWinters {
             r.tsUs, r.value, s.nLate)
         }
       }
-      state.update(s)
       import Rounding.r4
-      val out =
+      emit(
         if (s.n >= 2L)
           HwUpdate(key._1, key._2, s.n, s.nLate, Some(r4(s.s1)), Some(r4(s.b)))
-        else HwUpdate(key._1, key._2, s.n, s.nLate, None, None)
-      Iterator.single(out)
+        else HwUpdate(key._1, key._2, s.n, s.nLate, None, None))
+      s
     }
   }
 
@@ -105,11 +98,7 @@ object StreamingHoltWinters {
                       tf: Double = 0.1, ctf: Double = 0.9,
                       ttl: Option[Duration] = None): Dataset[HwUpdate] = {
     import samples.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    samples
-      .groupByKey(s => (s.name, s.user_id))
-      .transformWithState(new HwProcessor(sf, csf, tf, ctf, ttlConf),
-        timeMode, OutputMode.Update())
+    KeyedState.transform(samples.groupByKey(s => (s.name, s.user_id)),
+      OutputMode.Update(), ttl)(new HwProcessor(sf, csf, tf, ctf, _))
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** One stream row for change monitoring: a `group` (event type / metric)
   * observed at event time `tsUs`. */
@@ -31,46 +30,30 @@ final case class ShiftWindow(group: String, day: Long, n_events: Long,
   * frames, so in-order input reproduces q144's sums verbatim
   * (spec-verified on real testdata).
   *
-  * Ordering contract: rows inside a micro-batch sort by tsUs; a row behind
-  * the open day is counted in `nLate` and dropped (it cannot be spliced
-  * into an already-sealed day).
+  * Days seal by the [[DaySealFold]] rule: a row behind the open day is
+  * counted in `nLate` and dropped.
   */
 object StreamingMeanShift {
 
-  private val usPerDay = 86400000000L
-
   private final class MeanShiftProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, GroupTick, ShiftWindow] {
-    @transient private var state: ValueState[MeanShiftState] = _
+      extends DaySealFold[GroupTick, MeanShiftState, ShiftWindow](
+        "meanshift", Encoders.product[MeanShiftState], ttl) {
+    protected def zero = MeanShiftState(Long.MinValue, 0L, Seq.empty, 0L)
+    protected def tsUs(t: GroupTick) = t.tsUs
+    protected def openDay(s: MeanShiftState) = s.curDay
+    protected def late(s: MeanShiftState) = s.copy(nLate = s.nLate + 1)
+    protected def enter(s: MeanShiftState, day: Long, t: GroupTick) =
+      s.copy(curDay = day, curCount = s.curCount + 1)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[MeanShiftState]("meanshift",
-        Encoders.product[MeanShiftState], ttl)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[GroupTick],
-        timers: TimerValues): Iterator[ShiftWindow] = {
-      var s = if (state.exists()) state.get()
-              else MeanShiftState(Long.MinValue, 0L, Seq.empty, 0L)
-      val out = Seq.newBuilder[ShiftWindow]
-      rows.toArray.sortBy(_.tsUs).foreach { t =>
-        val d = t.tsUs / usPerDay
-        if (d < s.curDay) s = s.copy(nLate = s.nLate + 1)
-        else if (d == s.curDay || s.curDay == Long.MinValue)
-          s = s.copy(curDay = d, curCount = s.curCount + 1)
-        else {
-          // seal curDay; emit its windows once 14 closed days exist
-          val closed = s.recent :+ s.curCount
-          if (closed.length >= 14) {
-            val last14 = closed.takeRight(14)
-            out += ShiftWindow(key, s.curDay, s.curCount,
-              last14.takeRight(7).sum, last14.take(7).sum)
-          }
-          s = MeanShiftState(d, 1L, closed.takeRight(13), s.nLate)
-        }
+    // emit the sealed day's windows once 14 closed days exist
+    protected def seal(key: String, s: MeanShiftState, emit: ShiftWindow => Unit) = {
+      val closed = s.recent :+ s.curCount
+      if (closed.length >= 14) {
+        val last14 = closed.takeRight(14)
+        emit(ShiftWindow(key, s.curDay, s.curCount,
+          last14.takeRight(7).sum, last14.take(7).sum))
       }
-      state.update(s)
-      out.result().iterator
+      s.copy(curCount = 0L, recent = closed.takeRight(13))
     }
   }
 
@@ -79,10 +62,7 @@ object StreamingMeanShift {
   def shiftWindows(ticks: Dataset[GroupTick],
                    ttl: Option[Duration] = None): Dataset[ShiftWindow] = {
     import ticks.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    ticks
-      .groupByKey(_.group)
-      .transformWithState(new MeanShiftProcessor(ttlConf), timeMode, OutputMode.Append())
+    KeyedState.transform(ticks.groupByKey(_.group), OutputMode.Append(), ttl)(
+      new MeanShiftProcessor(_))
   }
 }

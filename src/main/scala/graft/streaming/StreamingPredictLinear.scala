@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Per-series regression state: Welford/co-moment sufficient statistics —
   * count, means, centered second moment of x and co-moment of (x, y) —
@@ -47,19 +46,14 @@ final case class PredictUpdate(
 object StreamingPredictLinear {
 
   private final class PredictProcessor(horizonSec: Double, ttl: TTLConfig)
-      extends StatefulProcessor[(String, Long), CounterSample, PredictUpdate] {
-    @transient private var state: ValueState[RegrState] = _
+      extends ValueStateFold[(String, Long), CounterSample, RegrState, PredictUpdate](
+        "regr", Encoders.product[RegrState], ttl) {
+    protected def zero = RegrState(0L, -1L, -1L, 0.0, 0.0, 0.0, 0.0)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[RegrState]("regr", Encoders.product[RegrState], ttl)
-
-    override def handleInputRows(
-        key: (String, Long), rows: Iterator[CounterSample],
-        timers: TimerValues): Iterator[PredictUpdate] = {
-      val batch = rows.toArray.sortBy(s => (s.tsUs, s.value))
-      var s = if (state.exists()) state.get()
-              else RegrState(0L, -1L, -1L, 0.0, 0.0, 0.0, 0.0)
-      batch.foreach { r =>
+    protected def fold(key: (String, Long), s0: RegrState, rows: Iterator[CounterSample],
+                       emit: PredictUpdate => Unit) = {
+      var s = s0
+      rows.toArray.sortBy(s => (s.tsUs, s.value)).foreach { r =>
         val t0 = if (s.n == 0L) r.tsUs else s.t0Us
         val x = (r.tsUs - t0) / 1e6
         val n1 = s.n + 1
@@ -69,8 +63,7 @@ object StreamingPredictLinear {
         s = RegrState(n1, t0, math.max(s.lastTsUs, r.tsUs), meanX, meanY,
           s.m2x + dx * (x - meanX), s.cxy + dx * (r.value - meanY))
       }
-      state.update(s)
-      val out =
+      emit(
         if (s.m2x > 0.0) {
           val slope = s.cxy / s.m2x
           val icept = s.meanY - slope * s.meanX
@@ -78,8 +71,8 @@ object StreamingPredictLinear {
           import Rounding.{r4, r6}
           PredictUpdate(key._1, key._2, s.n,
             Some(r6(slope)), Some(r4(icept)), Some(r4(icept + slope * (xEnd + horizonSec))))
-        } else PredictUpdate(key._1, key._2, s.n, None, None, None)
-      Iterator.single(out)
+        } else PredictUpdate(key._1, key._2, s.n, None, None, None))
+      s
     }
   }
 
@@ -92,11 +85,7 @@ object StreamingPredictLinear {
   def predictUpdates(samples: Dataset[CounterSample], horizonSec: Double = 300.0,
                      ttl: Option[Duration] = None): Dataset[PredictUpdate] = {
     import samples.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    samples
-      .groupByKey(s => (s.name, s.user_id))
-      .transformWithState(new PredictProcessor(horizonSec, ttlConf),
-        timeMode, OutputMode.Update())
+    KeyedState.transform(samples.groupByKey(s => (s.name, s.user_id)),
+      OutputMode.Update(), ttl)(new PredictProcessor(horizonSec, _))
   }
 }

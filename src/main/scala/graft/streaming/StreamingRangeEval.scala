@@ -135,12 +135,7 @@ object StreamingRangeEval {
     import samples.sparkSession.implicits._
     require(step.getSeconds > 0 && window.getSeconds >= step.getSeconds,
       "range-eval needs 0 < step <= window")
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    samples
-      .groupByKey(_.name)
-      .transformWithState(
-        new RangeEvalProcessor(step.getSeconds, window.getSeconds, ttlConf),
-        timeMode, OutputMode.Update())
+    KeyedState.transform(samples.groupByKey(_.name), OutputMode.Update(), ttl)(
+      new RangeEvalProcessor(step.getSeconds, window.getSeconds, _))
   }
 }

@@ -141,15 +141,8 @@ object StreamingRate {
   def rateUpdates(samples: Dataset[CounterSample],
                   ttl: Option[Duration] = None): Dataset[RateTotals] = {
     import samples.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    // TTL needs the ProcessingTime time mode; but that mode makes the engine
-    // fire micro-batches continuously to advance the clock even with no
-    // data, so only opt into it when eviction is actually requested.
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    samples
-      .groupByKey(s => (s.name, s.user_id))
-      .transformWithState(new CounterRateProcessor(ttlConf),
-        timeMode, OutputMode.Update())
+    KeyedState.transform(samples.groupByKey(s => (s.name, s.user_id)),
+      OutputMode.Update(), ttl)(new CounterRateProcessor(_))
   }
 
   /** Warm-started variant: seed per-series state from [[batchBaseline]]'s
@@ -162,11 +155,10 @@ object StreamingRate {
   def rateUpdatesFrom(samples: Dataset[CounterSample], baseline: Dataset[RateBaseline],
                       ttl: Option[Duration] = None): Dataset[RateTotals] = {
     import samples.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
     samples
       .groupByKey(s => (s.name, s.user_id))
-      .transformWithState(new CounterRateProcessor(ttlConf), timeMode, OutputMode.Update(),
+      .transformWithState(new CounterRateProcessor(KeyedState.ttlConfig(ttl)),
+        KeyedState.timeMode(ttl), OutputMode.Update(),
         baseline.groupByKey(b => (b.name, b.user_id)))
   }
 

@@ -54,23 +54,7 @@ object StreamingSkewProfile {
         batchCounts.update(r.token, batchCounts.getOrElse(r.token, 0L) + 1L)
         batchN += 1L
       }
-      val tracked = scala.collection.mutable.HashMap.empty[String, SsCounter]
-      counters.iterator().foreach { case (t, c) => tracked.update(t, c) }
-      val dirty = scala.collection.mutable.HashSet.empty[String]
-      batchCounts.toSeq.sortBy(_._1).foreach { case (token, n) =>
-        tracked.get(token) match {
-          case Some(c) => tracked.update(token, c.copy(count = c.count + n))
-          case None if tracked.size < capacity =>
-            tracked.update(token, SsCounter(n, 0L))
-          case None =>
-            val (minTok, minC) = tracked.minBy { case (t, c) => (c.count, t) }
-            tracked.remove(minTok)
-            counters.removeKey(minTok)
-            tracked.update(token, SsCounter(minC.count + n, minC.count))
-        }
-        dirty.add(token)
-      }
-      dirty.foreach(t => tracked.get(t).foreach(c => counters.updateValue(t, c)))
+      val tracked = StreamingHeavyHitters.offer(counters, batchCounts, capacity)
       val n = (if (total.exists()) total.get() else 0L) + batchN
       total.update(n)
       if (tracked.isEmpty || n == 0) Iterator.empty

@@ -97,10 +97,10 @@ object StreamingStaleness {
     forgetAfter.foreach(f => require(f.compareTo(staleAfter) > 0,
       s"forgetAfter $f must exceed staleAfter $staleAfter"))
     import samples.sparkSession.implicits._
-    val ttl = forgetAfter.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
     samples
       .groupByKey(s => (s.name, s.user_id))
-      .transformWithState(new StalenessProcessor(staleAfter.toMillis, ttl),
+      .transformWithState(
+        new StalenessProcessor(staleAfter.toMillis, KeyedState.ttlConfig(forgetAfter)),
         TimeMode.ProcessingTime(), OutputMode.Update())
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Per-group trend state: the open day + its running count, the ≤horizon
   * most recent CLOSED (day, count) points as two parallel sequences
@@ -49,13 +48,10 @@ final case class TrendFit(group: String, day: Long, n_days: Long,
   * bounded exactly like batch q195's per-row array explode, and only on
   * day boundaries, not per row.
   *
-  * Ordering contract: rows inside a micro-batch sort by tsUs; a row
-  * behind the open day is counted in `n_late` and dropped (it cannot be
-  * spliced into an already-sealed day).
+  * Days seal by the [[DaySealFold]] rule; `n_late` reports its late
+  * count.
   */
 object StreamingTheilSen {
-
-  private val usPerDay = 86400000000L
 
   /** The Sen fit over parallel (day, count) arrays — batch q195's median
     * picks verbatim: slopes sorted ascending, slope = avg of the 1-based
@@ -87,38 +83,24 @@ object StreamingTheilSen {
   }
 
   private final class TheilSenProcessor(horizon: Int, ttl: TTLConfig)
-      extends StatefulProcessor[String, GroupTick, TrendFit] {
-    @transient private var state: ValueState[TheilSenState] = _
+      extends DaySealFold[GroupTick, TheilSenState, TrendFit](
+        "theilsen", Encoders.product[TheilSenState], ttl) {
+    protected def zero = TheilSenState(Long.MinValue, 0L, Seq.empty, Seq.empty, 0L)
+    protected def tsUs(t: GroupTick) = t.tsUs
+    protected def openDay(s: TheilSenState) = s.curDay
+    protected def late(s: TheilSenState) = s.copy(nLate = s.nLate + 1)
+    protected def enter(s: TheilSenState, day: Long, t: GroupTick) =
+      s.copy(curDay = day, curCount = s.curCount + 1)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[TheilSenState]("theilsen",
-        Encoders.product[TheilSenState], ttl)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[GroupTick],
-        timers: TimerValues): Iterator[TrendFit] = {
-      var s = if (state.exists()) state.get()
-              else TheilSenState(Long.MinValue, 0L, Seq.empty, Seq.empty, 0L)
-      val out = Seq.newBuilder[TrendFit]
-      rows.toArray.sortBy(_.tsUs).foreach { t =>
-        val d = t.tsUs / usPerDay
-        if (d < s.curDay) s = s.copy(nLate = s.nLate + 1)
-        else if (d == s.curDay || s.curDay == Long.MinValue)
-          s = s.copy(curDay = d, curCount = s.curCount + 1)
-        else {
-          // seal curDay into the ring; re-derive the fit when ≥ 2 points
-          val days = (s.days :+ s.curDay).takeRight(horizon)
-          val cnts = (s.cnts :+ s.curCount).takeRight(horizon)
-          if (days.length >= 2) {
-            val (np, slope, icept) = senFit(days.toIndexedSeq, cnts.toIndexedSeq)
-            out += TrendFit(key, s.curDay, days.length.toLong, np,
-              slope, icept, s.nLate)
-          }
-          s = TheilSenState(d, 1L, days, cnts, s.nLate)
-        }
+    // seal the day into the ring; re-derive the fit when ≥ 2 points
+    protected def seal(key: String, s: TheilSenState, emit: TrendFit => Unit) = {
+      val days = (s.days :+ s.curDay).takeRight(horizon)
+      val cnts = (s.cnts :+ s.curCount).takeRight(horizon)
+      if (days.length >= 2) {
+        val (np, slope, icept) = senFit(days.toIndexedSeq, cnts.toIndexedSeq)
+        emit(TrendFit(key, s.curDay, days.length.toLong, np, slope, icept, s.nLate))
       }
-      state.update(s)
-      out.result().iterator
+      s.copy(curCount = 0L, days = days, cnts = cnts)
     }
   }
 
@@ -130,11 +112,7 @@ object StreamingTheilSen {
                 ttl: Option[Duration] = None): Dataset[TrendFit] = {
     require(horizon >= 2, s"horizon $horizon cannot hold a 2-point fit")
     import ticks.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    ticks
-      .groupByKey(_.group)
-      .transformWithState(new TheilSenProcessor(horizon, ttlConf), timeMode,
-        OutputMode.Append())
+    KeyedState.transform(ticks.groupByKey(_.group), OutputMode.Append(), ttl)(
+      new TheilSenProcessor(horizon, _))
   }
 }

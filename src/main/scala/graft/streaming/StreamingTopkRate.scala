@@ -97,10 +97,7 @@ object StreamingTopkRate {
                ttl: Option[Duration] = None): Dataset[TopkRate] = {
     require(k > 0, s"k must be positive, got $k")
     import samples.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    samples
-      .groupByKey(_.name)
-      .transformWithState(new TopkRateProcessor(k, ttlConf), timeMode, OutputMode.Update())
+    KeyedState.transform(samples.groupByKey(_.name), OutputMode.Update(), ttl)(
+      new TopkRateProcessor(k, _))
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** One journey event for a user; `tsUs` is event time in epoch micros. */
 final case class JourneyEvent(user_id: Long, event_type: String, tsUs: Long)
@@ -35,20 +34,15 @@ final case class TransitionDelta(user_id: Long, cur: String, nxt: String, n: Lon
 object StreamingTransitions {
 
   private final class TransitionProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, JourneyEvent, TransitionDelta] {
-    @transient private var state: ValueState[JourneyState] = _
+      extends ValueStateFold[Long, JourneyEvent, JourneyState, TransitionDelta](
+        "journey", Encoders.product[JourneyState], ttl) {
+    protected def zero = JourneyState(null, Long.MinValue, 0L)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[JourneyState]("journey",
-        Encoders.product[JourneyState], ttl)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[JourneyEvent],
-        timers: TimerValues): Iterator[TransitionDelta] = {
-      val batch = rows.toArray.sortBy(e => (e.tsUs, e.event_type))
-      var s = if (state.exists()) state.get() else JourneyState(null, Long.MinValue, 0L)
+    protected def fold(key: Long, s0: JourneyState, rows: Iterator[JourneyEvent],
+                       emit: TransitionDelta => Unit) = {
+      var s = s0
       val counts = scala.collection.mutable.LinkedHashMap.empty[(String, String), Long]
-      batch.foreach { e =>
+      rows.toArray.sortBy(e => (e.tsUs, e.event_type)).foreach { e =>
         if (e.tsUs < s.hwmUs) {
           s = s.copy(nLate = s.nLate + 1)
         } else {
@@ -59,8 +53,8 @@ object StreamingTransitions {
           s = JourneyState(e.event_type, e.tsUs, s.nLate)
         }
       }
-      state.update(s)
-      counts.iterator.map { case ((cur, nxt), n) => TransitionDelta(key, cur, nxt, n) }
+      counts.foreach { case ((cur, nxt), n) => emit(TransitionDelta(key, cur, nxt, n)) }
+      s
     }
   }
 
@@ -70,11 +64,7 @@ object StreamingTransitions {
   def transitionDeltas(events: Dataset[JourneyEvent],
                        ttl: Option[Duration] = None): Dataset[TransitionDelta] = {
     import events.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new TransitionProcessor(ttlConf),
-        timeMode, OutputMode.Append())
+    KeyedState.transform(events.groupByKey(_.user_id), OutputMode.Append(), ttl)(
+      new TransitionProcessor(_))
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Per-group regression state: the open day + its count, plus the running
   * OLS moments over CLOSED days — x is the epoch day REBASED to the
@@ -44,20 +43,21 @@ final case class TrendUpdate(group: String, day: Long, n_days: Long,
   * integer moments, same rounding (spec-verified against the batch
   * operator on a shared fixture). Degenerate fits stay silent until two
   * days with distinct x exist, like the batch `den > 0` filter; zero
-  * y-variance emits R² = None (batch: NULL). Same ordering/late-row
-  * contract as [[StreamingMeanShift]].
+  * y-variance emits R² = None (batch: NULL). Days seal by the
+  * [[DaySealFold]] rule.
   */
 object StreamingTrend {
 
-  private val usPerDay = 86400000000L
-
   private final class TrendProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, GroupTick, TrendUpdate] {
-    @transient private var state: ValueState[TrendState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[TrendState]("trend",
-        Encoders.product[TrendState], ttl)
+      extends DaySealFold[GroupTick, TrendState, TrendUpdate](
+        "trend", Encoders.product[TrendState], ttl) {
+    protected def zero = TrendState(Long.MinValue, 0L, Long.MinValue,
+      0L, 0L, 0L, 0L, 0L, 0L, 0L)
+    protected def tsUs(t: GroupTick) = t.tsUs
+    protected def openDay(s: TrendState) = s.curDay
+    protected def late(s: TrendState) = s.copy(nLate = s.nLate + 1)
+    protected def enter(s: TrendState, day: Long, t: GroupTick) =
+      s.copy(curDay = day, curCount = s.curCount + 1)
 
     private def fit(key: String, s: TrendState, sealedDay: Long): Option[TrendUpdate] = {
       val num = s.n * s.sxy - s.sx * s.sy
@@ -75,31 +75,15 @@ object StreamingTrend {
         s.nLate))
     }
 
-    override def handleInputRows(
-        key: String, rows: Iterator[GroupTick],
-        timers: TimerValues): Iterator[TrendUpdate] = {
-      var s = if (state.exists()) state.get()
-              else TrendState(Long.MinValue, 0L, Long.MinValue,
-                0L, 0L, 0L, 0L, 0L, 0L, 0L)
-      val out = Seq.newBuilder[TrendUpdate]
-      rows.toArray.sortBy(_.tsUs).foreach { t =>
-        val d = t.tsUs / usPerDay
-        if (d < s.curDay) s = s.copy(nLate = s.nLate + 1)
-        else if (d == s.curDay || s.curDay == Long.MinValue)
-          s = s.copy(curDay = d, curCount = s.curCount + 1)
-        else {
-          // seal curDay: fold (x, y) into the moments, refresh the fit
-          val base = if (s.x0 == Long.MinValue) s.curDay else s.x0
-          val x = s.curDay - base
-          val y = s.curCount
-          s = s.copy(x0 = base, n = s.n + 1, sx = s.sx + x, sy = s.sy + y,
-            sxy = s.sxy + x * y, sxx = s.sxx + x * x, syy = s.syy + y * y)
-          fit(key, s, s.curDay).foreach(out += _)
-          s = s.copy(curDay = d, curCount = 1L)
-        }
-      }
-      state.update(s)
-      out.result().iterator
+    // fold the sealed day's (x, y) into the moments, refresh the fit
+    protected def seal(key: String, s0: TrendState, emit: TrendUpdate => Unit) = {
+      val base = if (s0.x0 == Long.MinValue) s0.curDay else s0.x0
+      val x = s0.curDay - base
+      val y = s0.curCount
+      val s = s0.copy(curCount = 0L, x0 = base, n = s0.n + 1, sx = s0.sx + x,
+        sy = s0.sy + y, sxy = s0.sxy + x * y, sxx = s0.sxx + x * x, syy = s0.syy + y * y)
+      fit(key, s, s.curDay).foreach(emit)
+      s
     }
   }
 
@@ -108,10 +92,7 @@ object StreamingTrend {
   def trendUpdates(ticks: Dataset[GroupTick],
                    ttl: Option[Duration] = None): Dataset[TrendUpdate] = {
     import ticks.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    ticks
-      .groupByKey(_.group)
-      .transformWithState(new TrendProcessor(ttlConf), timeMode, OutputMode.Append())
+    KeyedState.transform(ticks.groupByKey(_.group), OutputMode.Append(), ttl)(
+      new TrendProcessor(_))
   }
 }

@@ -93,12 +93,8 @@ object StreamingVectorRatio {
                    num: String = "error", den: String = "click",
                    ttl: Option[Duration] = None): Dataset[RatioUpdate] = {
     import samples.sparkSession.implicits._
-    val ttlConf = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    samples
-      .filter(s => s.name == num || s.name == den)
-      .groupByKey(_.user_id)
-      .transformWithState(new RatioProcessor(num, den, ttlConf),
-        timeMode, OutputMode.Update())
+    KeyedState.transform(
+      samples.filter(s => s.name == num || s.name == den).groupByKey(_.user_id),
+      OutputMode.Update(), ttl)(new RatioProcessor(num, den, _))
   }
 }

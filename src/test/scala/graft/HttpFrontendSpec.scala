@@ -6,7 +6,7 @@ import java.nio.file.Files
 
 import graft.sources.{BodyStream, HttpFrontend, Prompb, RemoteWrite}
 import graft.sources.Prompb.{Sample, TimeSeries}
-import graft.streaming.{CollectingSink, RelayPipeline}
+import graft.streaming.{CollectingSink, ExactlyOnceFileSink, RelayPipeline}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -116,6 +116,56 @@ class HttpFrontendSpec extends AnyFunSuite {
       q.awaitTermination(60000)
       assert(sink.allLines.size == 4)
       assert((1 to 4).forall(i => sink.allLines.exists(_.contains(s""""name":"m$i""""))))
+    } finally f.stop()
+  }
+
+  test("ingest while draining: every posted record reaches the exactly-once sink once") {
+    // POSTs race a live 1 s trigger: a directory listing taken while the
+    // frontend renames bodies in must never admit a body past a gap
+    val dir = Files.createTempDirectory("graft-http-").toString
+    val sinkDir = Files.createTempDirectory("graft-http-sink-").toString
+    val ckpt = Files.createTempDirectory("graft-http-ckpt-").toString
+    val connections = 2
+    val perConnection = 3000
+    val f = new HttpFrontend(dir, 0)
+    f.start()
+    try {
+      val q = RelayPipeline.start(spark, RemoteWrite.bodyDsv2Stream(spark, dir),
+        new ExactlyOnceFileSink(sinkDir, "relay"),
+        trigger = Trigger.ProcessingTime("1 second"), checkpointDir = Some(ckpt))
+      try {
+        val refused = new java.util.concurrent.atomic.AtomicInteger
+        val posters = (0 until connections).map { c =>
+          val t = new Thread(() => {
+            val client = HttpClient.newHttpClient() // one keep-alive connection
+            (0 until perConnection).foreach { i =>
+              val code = client.send(
+                HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${f.boundPort}/receive"))
+                  .POST(HttpRequest.BodyPublishers.ofByteArray(body(TimeSeries(
+                    Map("__name__" -> s"c${c}_$i"), Seq(Sample(i.toDouble, i.toLong))))))
+                  .build(),
+                HttpResponse.BodyHandlers.discarding()).statusCode()
+              if (code != 200) refused.incrementAndGet()
+            }
+          })
+          t.start()
+          t
+        }
+        posters.foreach(_.join())
+        assert(refused.get == 0)
+        q.processAllAvailable()
+        assert(q.exception.isEmpty, q.exception.toString)
+      } finally q.stop()
+      import scala.jdk.CollectionConverters._
+      val Name = """"name":"([^"]*)"""".r
+      val names = Files.walk(java.nio.file.Paths.get(sinkDir)).iterator().asScala
+        .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
+        .flatMap(p => Files.readAllLines(p).asScala)
+        .flatMap(l => Name.findFirstMatchIn(l).map(_.group(1)))
+        .toVector
+      val expected = for (c <- 0 until connections; i <- 0 until perConnection) yield s"c${c}_$i"
+      assert(names.size == expected.size, "records lost or duplicated")
+      assert(names.toSet == expected.toSet)
     } finally f.stop()
   }
 }

@@ -43,10 +43,13 @@ class NgramJaccardRegimesSpec extends AnyFunSuite {
       graft.Tables(spark, dir, "documents")))
     val viaRegistry = pairs(Dedup.ngramJaccardPairsExact(spark, dir))
     assert(viaRegistry === direct)
-    // both artifacts are registered under the corpus snapshot key...
+    // both artifacts are registered under the corpus snapshot key (a
+    // registered key answers without running its build)...
     val snap = Materialize.snapshot(s"$dir/documents.parquet")
-    assert(Materialize.has(s"ppjoin-sets:$dir@$snap"))
-    assert(Materialize.has(s"ppjoin-prefix:$dir@$snap:t0.5"))
+    def registered(key: String): Unit =
+      Materialize.parquetDir(key, "graft-unregistered-")(fail(s"$key is not registered"))
+    registered(s"ppjoin-sets:$dir@$snap")
+    registered(s"ppjoin-prefix:$dir@$snap:t0.5")
     // ...and the warm re-run answers from them, unchanged
     assert(pairs(Dedup.ngramJaccardPairsExact(spark, dir)) === direct)
   }
