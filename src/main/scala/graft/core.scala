@@ -115,6 +115,24 @@ object Par {
       val target = df.sparkSession.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions < target) df.repartition(target) else df
     }
+
+  /** Evaluates `a` and `b` on two threads and returns both results. The
+    * first failure wins: its own exception is rethrown (not the pool's
+    * `ExecutionException` wrapper) and the other thread is interrupted
+    * rather than left running. */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors}
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val done = new ExecutorCompletionService[Any](pool)
+      val fa = done.submit((() => a): Callable[Any])
+      val fb = done.submit((() => b): Callable[Any])
+      for (_ <- 1 to 2)
+        try done.take().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      (fa.get().asInstanceOf[A], fb.get().asInstanceOf[B])
+    } finally pool.shutdownNow()
+  }
 }
 
 /** A bundle of named queries plus their DuckDB oracle SQL.

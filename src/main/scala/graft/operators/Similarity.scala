@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryModule, Tables}
+import graft.{Par, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -514,13 +514,16 @@ object Similarity extends QueryModule {
       WarehouseOps.hintBySize(df, rows, limit)
     val nodes = normed(emb).select(col("vec_id"))
     val nNodes = nodes.count()
+    // an empty table has no ranks to share out: divide by 1, not 0, and
+    // return the oracle's empty answer
+    val nShare = math.max(nNodes, 1L)
     val odeg = edges.groupBy(col("src"))
       .agg(count(lit(1)).cast("long").as("od"))
     val edgesOd = edges.join(gate(odeg, nNodes), "src").localCheckpoint(true)
     // fixed-point: 1e12 rank units; integer div / integer sum / one IEEE
     // multiply per step — bit-identical across engines by construction
     val init = nodes
-      .select(col("vec_id"), lit(1000000000000L / nNodes).as("r"))
+      .select(col("vec_id"), lit(1000000000000L / nShare).as("r"))
       .localCheckpoint(true)
     val finalRanks = (1 to iters).foldLeft(init) { (ranks, _) =>
       val contrib = edgesOd
@@ -530,7 +533,7 @@ object Similarity extends QueryModule {
         .join(gate(contrib.withColumnRenamed("dst", "vec_id"), nNodes),
           Seq("vec_id"), "left_outer")
         .select(col("vec_id"),
-          (floor((lit(1.0) - lit(damp)) * lit(1e12) / lit(nNodes)).cast("long")
+          (floor((lit(1.0) - lit(damp)) * lit(1e12) / lit(nShare)).cast("long")
             + floor(lit(damp) * coalesce(col("inc"), lit(0L))).cast("long")).as("r"))
         .localCheckpoint(true)
     }
@@ -1170,18 +1173,11 @@ object Similarity extends QueryModule {
     // the composed j0 subtree inside the one big job (AQE re-planning
     // defeats exchange reuse across the union's branches), so the
     // barrier's cost is the cheaper price here; keep eager, in parallel.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (tSig0, vSig0) = try {
-      val tF = pool.submit({ () =>
-        Dedup.gateSignatureData(docs.filter(col("doc_id") < 400))
-          .localCheckpoint(true)
-      }: java.util.concurrent.Callable[DataFrame])
-      val vF = pool.submit({ () =>
-        StreamingEmbeddingGate.signatureData(
-          emb2.filter(col("vec_id") < 400)).localCheckpoint(true)
-      }: java.util.concurrent.Callable[DataFrame])
-      (tF.get(), vF.get())
-    } finally pool.shutdown()
+    val (tSig0, vSig0) = Par.both(
+      Dedup.gateSignatureData(docs.filter(col("doc_id") < 400))
+        .localCheckpoint(true),
+      StreamingEmbeddingGate.signatureData(
+        emb2.filter(col("vec_id") < 400)).localCheckpoint(true))
     val tb0 = docs.filter(col("doc_id") >= 400 && col("doc_id") < 475)
     val vb0 = emb2.filter(col("vec_id") >= 400 && col("vec_id") < 475)
     val j0 = StreamingJointGate.compose(

@@ -16,14 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DSv2 source for remote-write POST bodies — the "proper" Spark-native
   * answer to the reference's HTTP entry point (`/root/reference/main.go:61`,
-  * `kinesis.go:68-93`) that SURVEY §2.1 planned and rounds 1-3 stood in for
-  * with the generic binaryFile stream.
+  * `kinesis.go:68-93`) that SURVEY §2.1 planned.
   *
-  * Protocol (same directory convention as [[RemoteWrite.bodyDirStream]]): a
-  * tiny HTTP frontend appends each received POST body as one file whose name
-  * is a monotonically increasing sequence id (e.g. zero-padded counter or
-  * timestamp). This source's streaming offset IS the received-body sequence
-  * number: offset N = "the first N files in name order". That makes offsets
+  * Protocol: a tiny HTTP frontend appends each received POST body as one
+  * file whose name is a monotonically increasing sequence id (e.g.
+  * zero-padded counter or timestamp). This source's streaming offset IS
+  * the received-body sequence number: offset N = "the first N files in
+  * name order". That makes offsets
   *   - exactly replayable: any [start, end) range always maps to the same
   *     bodies (files are append-only, names monotonic — the same contract
   *     Kafka offsets or the reference's implicit channel ordering rely on);
@@ -33,16 +32,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Admission control: `maxFilesPerTrigger` bounds each micro-batch — the
   * backpressure knob standing in for the reference's bounded channel
-  * (`kinesis.go:21,60`). Unlike the binaryFile source, there is no
-  * seen-files map on the driver: state is one long plus the name of the
-  * last admitted file (the high-water mark that makes the index→file
-  * mapping verifiable on replay). At 1000-executor scale
-  * the per-batch file slice is split into `filesPerPartition` groups, so
-  * read parallelism follows batch size instead of pinning to the driver.
+  * (`kinesis.go:21,60`). There is no seen-files map on the driver: state
+  * is one long plus the name of the last admitted file (the high-water
+  * mark that makes the index→file mapping verifiable on replay). Each
+  * batch's file slice is split into `min(files, defaultParallelism)`
+  * contiguous groups ([[BodyStream.partitions]]), so a micro-batch of a
+  * dozen bodies is decoded on every core, not by one task.
   *
   * Schema: `seq BIGINT, path STRING, body BINARY` — `body` feeds
   * [[RemoteWrite.fromBodies]]; `seq` gives downstream operators a total
-  * arrival order the binaryFile source cannot provide.
+  * arrival order.
   */
 object BodyStream {
   val schema: StructType = StructType.fromDDL("seq BIGINT, path STRING, body BINARY")
@@ -66,13 +65,24 @@ object BodyStream {
 
   case class BodyPartition(dir: String, files: Seq[(Long, String)]) extends InputPartition
 
-  def partitions(dir: String, files: Seq[String], baseSeq: Long,
-                 filesPerPartition: Int): Array[InputPartition] =
-    files.zipWithIndex
-      .map { case (f, i) => (baseSeq + i, f) }
-      .grouped(math.max(1, filesPerPartition))
-      .map(g => BodyPartition(dir, g): InputPartition)
-      .toArray
+  /** Splits a slice of `files` (seq numbers from `baseSeq`) into
+    * `min(files, parallelism)` contiguous groups in seq order whose sizes
+    * differ by at most one. The grouping is not part of the offset: a
+    * replay under another parallelism reads the same bodies, and the
+    * exactly-once sink clears the whole batch before delivery. */
+  def partitions(dir: String, files: IndexedSeq[String], baseSeq: Long,
+                 parallelism: Int): Array[InputPartition] = {
+    val n = files.length
+    val groups = math.min(n, math.max(1, parallelism))
+    Array.tabulate[InputPartition](groups) { g =>
+      val (lo, hi) = (g * n / groups, (g + 1) * n / groups)
+      BodyPartition(dir, (lo until hi).map(i => (baseSeq + i, files(i))))
+    }
+  }
+
+  /** The cluster's default parallelism, read on the driver at planning. */
+  def defaultParallelism: Int =
+    org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
 
   /** Fail-loud offset-contract check that also ANCHORS the offset in
     * today's listing: returns the listing index of the first body after the
@@ -175,12 +185,11 @@ class BodyStreamProvider extends TableProvider with DataSourceRegister {
     new BodyTable(
       Option(opts.get("path")).getOrElse(
         throw new IllegalArgumentException("remote-write-bodies: .load(dir) path required")),
-      opts.getInt("maxFilesPerTrigger", 1000),
-      opts.getInt("filesPerPartition", 100))
+      opts.getInt("maxFilesPerTrigger", 1000))
   }
 }
 
-class BodyTable(dir: String, maxFilesPerTrigger: Int, filesPerPartition: Int)
+class BodyTable(dir: String, maxFilesPerTrigger: Int)
     extends Table with SupportsRead {
   override def name(): String = s"remote-write-bodies(`$dir`)"
   override def schema(): StructType = BodyStream.schema
@@ -188,19 +197,19 @@ class BodyTable(dir: String, maxFilesPerTrigger: Int, filesPerPartition: Int)
     java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
-      override def build(): Scan = new BodyScan(dir, maxFilesPerTrigger, filesPerPartition)
+      override def build(): Scan = new BodyScan(dir, maxFilesPerTrigger)
     }
 }
 
-class BodyScan(dir: String, maxFilesPerTrigger: Int, filesPerPartition: Int) extends Scan {
+class BodyScan(dir: String, maxFilesPerTrigger: Int) extends Scan {
   override def readSchema(): StructType = BodyStream.schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new BodyMicroBatchStream(dir, maxFilesPerTrigger, filesPerPartition)
+    new BodyMicroBatchStream(dir, maxFilesPerTrigger)
   /** Batch read of everything currently in the directory — lets the same
     * source back offline reprocessing (`spark.read.format(...)`). */
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      BodyStream.partitions(dir, BodyStream.list(dir), 0L, filesPerPartition)
+      BodyStream.partitions(dir, BodyStream.list(dir), 0L, BodyStream.defaultParallelism)
     override def createReaderFactory(): PartitionReaderFactory = BodyStream.ReaderFactory
   }
 }
@@ -255,7 +264,7 @@ object BodySeqOffset {
   }
 }
 
-class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int, filesPerPartition: Int)
+class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   /** Under Trigger.AvailableNow the engine asks us to pin "available" at
@@ -365,7 +374,8 @@ class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int, filesPerPartiti
           s"batch end boundary of `$dir` but found `${listing(endIdx - 1)}` — the " +
           "range re-mapped (non-monotonic names or removal of in-batch files). " +
           "Refusing to replay.")
-    BodyStream.partitions(dir, listing.slice(startIdx, endIdx), s.seq, filesPerPartition)
+    BodyStream.partitions(dir, listing.slice(startIdx, endIdx), s.seq,
+      BodyStream.defaultParallelism)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = BodyStream.ReaderFactory

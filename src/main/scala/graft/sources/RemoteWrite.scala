@@ -18,25 +18,10 @@ import org.apache.spark.sql.functions._
 object RemoteWrite {
 
   /** Production-shaped source (SURVEY.md §2.1): a frontend appends each
-    * remote-write POST body as one file; Spark streams the directory. The
-    * binaryFile source requires its schema stated explicitly for streaming.
-    * `maxFilesPerTrigger` is the backpressure knob standing in for the
-    * reference's bounded channel (`/root/reference/kinesis.go:21,60`).
-    */
-  def bodyDirStream(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    maxFilesPerTrigger: Int = 1000): DataFrame =
-    spark.readStream.format("binaryFile")
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(dir)
-      .select(col("content").as("body"))
-
-  /** Same directory protocol through the custom DSv2 source ([[BodyStream]]):
-    * offsets are received-body sequence numbers (one long of driver state,
-    * vs the binaryFile source's seen-files map), `maxFilesPerTrigger` is the
-    * admission-control knob, and rows carry `seq` — a total arrival order.
-    * Drop-in replacement for [[bodyDirStream]] in [[graft.streaming.RelayPipeline]].
+    * remote-write POST body as one file and [[BodyStream]] streams the
+    * directory. Offsets are received-body sequence numbers (one long of
+    * driver state), and `maxFilesPerTrigger` is the backpressure knob
+    * standing in for the reference's bounded channel (`kinesis.go:21,60`).
     */
   def bodyDsv2Stream(spark: org.apache.spark.sql.SparkSession, dir: String,
                      maxFilesPerTrigger: Int = 1000): DataFrame =

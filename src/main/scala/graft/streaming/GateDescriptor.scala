@@ -161,6 +161,7 @@ final case class GateTable(desc: GateDescriptor, sigDir: String) {
           processBatch(batch, batchId, deliver)
         }
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
+    LocalFirstCheckpointFileManager.register(stream.sparkSession)
     w.start()
   }
 

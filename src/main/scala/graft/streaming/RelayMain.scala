@@ -16,9 +16,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     [--stream-name metrics]        (main.go:74 -stream-name)
   *     [--firehose]                   (main.go:71 -firehose)
   *     [--write-interval 10]          (main.go:75, seconds; 0 = drain-and-exit)
-  *     [--source dsv2|files]          ingest source: the custom DSv2
-  *                                    sequence-offset source (default) or
-  *                                    the generic binaryFile stream
   *     [--listen-addr 9501]           also serve POST /receive on this port
   *                                    (main.go:73 -listen-addr), appending
   *                                    each accepted body to --in — the full
@@ -81,7 +78,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *                                    upload IS the commit latency
   *
   * That is all five reference flags (-firehose, -stream-name, -listen-addr,
-  * -region, -write-interval) plus the Spark-side ingest/source/analytics
+  * -region, -write-interval) plus the Spark-side ingest/analytics
   * knobs. The analytics stream is a SECOND reader over the same body
   * directory with its own offsets/checkpoint: delivery and analytics
   * advance independently, so a slow sink cannot stall the analytic (and
@@ -171,6 +168,7 @@ object RelayMain {
     val frame = analyticsFrame(RelayPipeline.records(bodies), mode,
       rateTtl, rangeWindow, staleAfter, topkCapacity, topkK, ratioNum, ratioDen,
       gridStep, gridWindow, driftRelearn = driftRelearn)
+    LocalFirstCheckpointFileManager.register(spark)
     frame.writeStream
       .queryName(s"graft-analytics-$mode")
       .trigger(trigger)
@@ -192,9 +190,9 @@ object RelayMain {
     val streamName = opts.getOrElse("--stream-name", "metrics")
     val firehose = args.contains("--firehose")
     val intervalSec = opts.getOrElse("--write-interval", "10").toInt
-    // Without a checkpoint the binaryFile source restarts from scratch and
-    // re-delivers every historical body after a crash; default one under the
-    // sink dir so restarts resume instead of duplicating.
+    // Without a checkpoint the source restarts from scratch and re-delivers
+    // every historical body after a crash; default one under the sink dir
+    // so restarts resume instead of duplicating.
     val checkpoint = opts.getOrElse("--checkpoint", s"$outDir/_checkpoint")
     // comma-separated modes all run from one process (each its own reader,
     // checkpoint, and state store — like several consumer groups)
@@ -244,10 +242,7 @@ object RelayMain {
       f
     }
 
-    def bodyStream() = opts.getOrElse("--source", "dsv2") match {
-      case "files" => RemoteWrite.bodyDirStream(spark, inDir)
-      case _ => RemoteWrite.bodyDsv2Stream(spark, inDir)
-    }
+    def bodyStream() = RemoteWrite.bodyDsv2Stream(spark, inDir)
     // finally-stop the frontend and Spark even when the stream dies with an
     // exception: the frontend's non-daemon pool would otherwise pin the JVM
     // alive after main unwinds

@@ -115,6 +115,7 @@ object StreamingJointGate {
           processBatch(batch, batchId, textTable, vecTable, deliver, itemKey)
         }
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
+    LocalFirstCheckpointFileManager.register(items.sparkSession)
     w.start()
   }
 }

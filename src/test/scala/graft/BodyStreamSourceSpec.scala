@@ -165,7 +165,7 @@ class BodyStreamSourceSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-bodies-").toString
     threeBodies(dir)
     val stream = new graft.sources.BodyMicroBatchStream(dir,
-      maxFilesPerTrigger = 1000, filesPerPartition = 100)
+      maxFilesPerTrigger = 1000)
     // pre-hwm checkpoint, already caught up: an idle trigger must anchor
     // hwm = listing(seq-1) instead of leaving the weaker length-only check
     // (and archival ineligibility) in place until new bodies arrive
@@ -217,5 +217,38 @@ class BodyStreamSourceSpec extends AnyFunSuite {
     // exactly the new body — no replay attempt against archived files
     assert(sink2.allLines.size == 1)
     assert(sink2.allLines.head.contains(""""name":"fresh""""))
+  }
+
+  test("partitions: contiguous groups, at most P, sizes within one, seq order kept") {
+    import graft.sources.BodyStream
+    import graft.sources.BodyStream.BodyPartition
+    for (n <- 0 to 30; p <- 1 to 8) {
+      val files = (0 until n).map(i => f"$i%08d.bin")
+      val groups = BodyStream.partitions("/d", files, 100L, p)
+        .map(_.asInstanceOf[BodyPartition].files)
+      withClue(s"n=$n p=$p: ") {
+        assert(groups.length == math.min(n, p))
+        // concatenated in order, the groups are exactly the slice with its seqs
+        assert(groups.flatten.toSeq == files.indices.map(i => (100L + i, files(i))))
+        if (n > 0) assert(groups.map(_.size).max - groups.map(_.size).min <= 1)
+        if (n <= p) assert(groups.forall(_.size == 1))
+      }
+    }
+    assert(BodyStream.partitions("/d", Vector.empty, 0L, 4).isEmpty)
+  }
+
+  test("a 12-body micro-batch on local[4] plans 4 input partitions") {
+    val dir = Files.createTempDirectory("graft-bodies-").toString
+    writeBodies(dir, (0 until 12).map(i =>
+      body(TimeSeries(Map("__name__" -> s"m$i"), Seq(Sample(i.toDouble, i.toLong))))))
+    val planned = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val q = RemoteWrite.bodyDsv2Stream(spark, dir).writeStream
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        planned.add(b.rdd.getNumPartitions); () }
+      .start()
+    q.awaitTermination(60000)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(planned.toArray.toSeq == Seq(4))
   }
 }

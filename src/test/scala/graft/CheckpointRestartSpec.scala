@@ -26,14 +26,14 @@ class CheckpointRestartSpec extends AnyFunSuite {
 
     writeBody(in, "b1", "m1")
     writeBody(in, "b2", "m2")
-    val q1 = RelayPipeline.start(spark, RemoteWrite.bodyDirStream(spark, in),
+    val q1 = RelayPipeline.start(spark, RemoteWrite.bodyDsv2Stream(spark, in),
       sink, trigger = Trigger.AvailableNow(), checkpointDir = Some(ckpt))
     q1.processAllAvailable(); q1.stop()
     assert(sink.allLines.size == 2)
 
     // New file arrives; restart from the same checkpoint.
     writeBody(in, "b3", "m3")
-    val q2 = RelayPipeline.start(spark, RemoteWrite.bodyDirStream(spark, in),
+    val q2 = RelayPipeline.start(spark, RemoteWrite.bodyDsv2Stream(spark, in),
       sink, trigger = Trigger.AvailableNow(), checkpointDir = Some(ckpt))
     q2.processAllAvailable(); q2.stop()
 

@@ -113,4 +113,15 @@ class DegenerateInputSpec extends AnyFunSuite {
     assert(s11.getAs[Long]("n_sessions") === 1L &&
       s11.getAs[Long]("n_events") === 2L, s"got $s11")
   }
+
+  test("q118 pagerank on an empty embeddings table returns the oracle's empty answer") {
+    import org.apache.spark.sql.types.StructType
+    val d = java.nio.file.Files.createTempDirectory("graft-degen-emb").toString
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"))
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    val pr = operators.Similarity.simPagerank(spark, d)
+    assert(pr.columns.toSeq == Seq("vec_id", "in_deg", "pr"))
+    assert(pr.collect().isEmpty)
+  }
 }

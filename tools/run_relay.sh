@@ -11,7 +11,7 @@
 # Usage:
 #   tools/run_relay.sh --in /data/bodies --out /data/sink \
 #       [--stream-name metrics] [--firehose] [--write-interval 10] \
-#       [--listen-addr 9501] [--region ap-northeast-1] [--source dsv2|files] \
+#       [--listen-addr 9501] [--region ap-northeast-1] \
 #       [--analytics rate|range-rate|topk|staleness]  (+ mode knobs, see
 #        RelayMain scaladoc: --rate-ttl/--range-window/--stale-after/--topk)
 #
