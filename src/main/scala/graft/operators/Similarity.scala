@@ -921,9 +921,11 @@ object Similarity extends QueryModule {
     import spark.implicits._
     // same quantization expression as the former posexplode form, applied
     // elementwise (round(x·100) HALF_UP, long) — absent cells contribute 0
-    // to G exactly as they contributed no row to the old per-cell sums
-    val xq = embTable(spark, dir).select(expr(
-      "transform(embedding, v -> cast(round(cast(v as double) * 100, 0) as bigint))")
+    // to G exactly as they contributed no row to the old per-cell sums. A
+    // null embedding unnests to no cells in the oracle, so it is dropped; a
+    // null element is a null xq there, which every sum skips, so it is 0.
+    val xq = embTable(spark, dir).where(col("embedding").isNotNull).select(expr(
+      "transform(embedding, v -> coalesce(cast(round(cast(v as double) * 100, 0) as bigint), 0L))")
       .as("xq"))
     val partials = xq.as[Seq[Long]].mapPartitions { it =>
       var d = 0
@@ -956,7 +958,9 @@ object Similarity extends QueryModule {
       .groupBy(col("da"), col("db"))
       .agg(sum(col("g").cast("decimal(38,0)")).as("g"))
       .collect()
-    val d = gRows.iterator.map(_.getInt(1)).max
+    // no cells (no rows, or only null/empty embeddings): the oracle's x is
+    // empty, so v0 and every later iterate are empty too
+    val d = if (gRows.isEmpty) 0 else gRows.iterator.map(_.getInt(1)).max
     val G = Array.fill(d, d)(BigInt(0))
     gRows.foreach { r =>
       val (a, b) = (r.getInt(0) - 1, r.getInt(1) - 1)
@@ -964,24 +968,28 @@ object Similarity extends QueryModule {
       G(a)(b) = v
       G(b)(a) = v
     }
-    var vi: Array[BigInt] =
-      Array.fill(d)(BigInt(math.round(1e6 / math.sqrt(d.toDouble))))
-    for (_ <- 1 to iters) {
+    // None once an iterate is all zero (an all-zero corpus): the oracle's
+    // t·1e6/sqrt(0) divides by zero, which is NULL there, and a NULL
+    // iterate stays NULL through every later sum
+    var vi: Option[Array[BigInt]] =
+      Some(Array.fill(d)(BigInt(math.round(1e6 / math.sqrt(d.toDouble)))))
+    for (_ <- 1 to iters) vi = vi.flatMap { v =>
       val t = Array.tabulate(d) { a =>
         var s = BigInt(0); var e = 0
-        while (e < d) { s += G(a)(e) * vi(e); e += 1 }
+        while (e < d) { s += G(a)(e) * v(e); e += 1 }
         s
       }
       var n2 = 0.0
       t.foreach(ti => n2 += math.pow(ti.toDouble, 2))
-      vi = t.map { ti =>
+      if (n2 == 0.0) None
+      else Some(t.map { ti =>
         // Spark's round(double): BigDecimal.valueOf + HALF_UP — reproduced
         // exactly (math.round floors negative halves; HALF_UP rounds away)
         BigInt(java.math.BigDecimal.valueOf(ti.toDouble * 1e6 / math.sqrt(n2))
           .setScale(0, java.math.RoundingMode.HALF_UP).longValue)
-      }
+      })
     }
-    val v: Seq[(Int, Long)] = (1 to d).map(i => i -> vi(i - 1).toLong)
+    val v: Seq[(Int, Option[Long])] = (1 to d).map(i => i -> vi.map(_(i - 1).toLong))
     v.toDF("dim", "vq")
       .select(col("dim"), col("vq"),
         (round(col("vq").cast("double") / 1e6, 6) + lit(0.0)).as("loading"))

@@ -23,6 +23,9 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *   - snappy or protobuf garbage → 400 (`kinesis.go:76-87`) — rejected
   *     HERE so corrupt input never enters the at-most-once stream (the
   *     reference drops it pre-queue for the same reason);
+  *   - a body whose raw bytes, or whose snappy-declared decompressed
+  *     length, exceed [[HttpFrontend.MaxBodyBytes]] → 413, before it is
+  *     decompressed (the reference reads any size with `io.ReadAll`);
   *   - accepted → 200 empty body (the handler's implicit Go default).
   *
   * Deliberately different from the reference: acceptance means DURABLY ON
@@ -68,10 +71,20 @@ class HttpFrontend(dir: String, port: Int, validate: Boolean = true) {
   private def handle(x: HttpExchange): Unit =
     try {
       if (x.getRequestMethod != "POST") { respond(x, 405); return }
+      val declared = Option(x.getRequestHeaders.getFirst("Content-Length")).flatMap(_.toLongOption)
+      if (declared.exists(_ > HttpFrontend.MaxBodyBytes)) { respond(x, 413); return }
       val body =
-        try x.getRequestBody.readAllBytes()
+        try x.getRequestBody.readNBytes(HttpFrontend.MaxBodyBytes + 1)
         catch { case e: Exception => respond(x, 500, String.valueOf(e.getMessage)); return }
+      if (body.length > HttpFrontend.MaxBodyBytes) { respond(x, 413); return }
       if (validate) {
+        // the declared length is read from the frame header before any
+        // decompression, so a small bomb costs only its own bytes
+        val declaredOut =
+          try org.xerial.snappy.Snappy.uncompressedLength(body)
+          catch { case e: Exception => respond(x, 400, String.valueOf(e.getMessage)); return }
+        // negative: a declared length of 2 GiB or more, wrapped to an Int
+        if (declaredOut < 0 || declaredOut > HttpFrontend.MaxBodyBytes) { respond(x, 413); return }
         try Prompb.decode(org.xerial.snappy.Snappy.uncompress(body))
         catch { case e: Exception => respond(x, 400, String.valueOf(e.getMessage)); return }
       }
@@ -124,4 +137,11 @@ class HttpFrontend(dir: String, port: Int, validate: Boolean = true) {
   }
 
   def boundPort: Int = server.getAddress.getPort
+}
+
+object HttpFrontend {
+  /** The most an untrusted body may cost: raw bytes read, and bytes its
+    * snappy header declares after decompression. 32 MiB is far above what
+    * Prometheus sends (`max_samples_per_send` defaults to 2000). */
+  val MaxBodyBytes: Int = 32 << 20
 }

@@ -161,7 +161,7 @@ final case class GateTable(desc: GateDescriptor, sigDir: String) {
           processBatch(batch, batchId, deliver)
         }
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
-    LocalFirstCheckpointFileManager.register(stream.sparkSession)
+    StreamSession.prepare(stream.sparkSession)
     w.start()
   }
 

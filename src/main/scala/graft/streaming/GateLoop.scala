@@ -219,7 +219,7 @@ object GateLoop {
             classify, signatureRows, deliver)
         }
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
-    LocalFirstCheckpointFileManager.register(stream.sparkSession)
+    StreamSession.prepare(stream.sparkSession)
     w.start()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FSDataInputStream, Path, PathFilter}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 /** Checkpoint renames that stay in-process on local disk.
@@ -51,13 +50,7 @@ class LocalFirstCheckpointFileManager(path: Path, hadoopConf: Configuration)
 }
 
 object LocalFirstCheckpointFileManager {
-  /** Spark's own key for the checkpoint manager class. */
+  /** Spark's own key for the checkpoint manager class; set on streaming
+    * sessions by [[StreamSession.prepare]]. */
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** Registers this manager on `spark` unless a manager is already set
-    * there. Call before `start()`: a streaming query copies the session's
-    * conf when it starts. */
-  def register(spark: SparkSession): Unit =
-    if (spark.conf.getOption(ConfKey).isEmpty)
-      spark.conf.set(ConfKey, classOf[LocalFirstCheckpointFileManager].getName)
 }

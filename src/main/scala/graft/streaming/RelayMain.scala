@@ -168,7 +168,7 @@ object RelayMain {
     val frame = analyticsFrame(RelayPipeline.records(bodies), mode,
       rateTtl, rangeWindow, staleAfter, topkCapacity, topkK, ratioNum, ratioDen,
       gridStep, gridWindow, driftRelearn = driftRelearn)
-    LocalFirstCheckpointFileManager.register(spark)
+    StreamSession.prepare(spark)
     frame.writeStream
       .queryName(s"graft-analytics-$mode")
       .trigger(trigger)

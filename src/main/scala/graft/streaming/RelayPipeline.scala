@@ -82,7 +82,7 @@ object RelayPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) => deliver(batch, sink, firehose, id) }
     checkpointDir.foreach(d => q.option("checkpointLocation", d))
-    LocalFirstCheckpointFileManager.register(spark)
+    StreamSession.prepare(spark)
     q.start()
   }
 }

@@ -115,7 +115,7 @@ object StreamingJointGate {
           processBatch(batch, batchId, textTable, vecTable, deliver, itemKey)
         }
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
-    LocalFirstCheckpointFileManager.register(items.sparkSession)
+    StreamSession.prepare(items.sparkSession)
     w.start()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Degenerate-input sweep over the text/dedup and event operator families:
@@ -115,13 +117,54 @@ class DegenerateInputSpec extends AnyFunSuite {
   }
 
   test("q118 pagerank on an empty embeddings table returns the oracle's empty answer") {
-    import org.apache.spark.sql.types.StructType
-    val d = java.nio.file.Files.createTempDirectory("graft-degen-emb").toString
-    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"))
-      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    val pr = operators.Similarity.simPagerank(spark, d)
+    val pr = operators.Similarity.simPagerank(spark, embeddingsDir(Nil))
     assert(pr.columns.toSeq == Seq("vec_id", "in_deg", "pr"))
     assert(pr.collect().isEmpty)
+  }
+
+  /** An embeddings table of these rows, as the fixtures' parquet. */
+  private def embeddingsDir(rows: Seq[org.apache.spark.sql.Row]): String = {
+    import org.apache.spark.sql.types.StructType
+    val d = java.nio.file.Files.createTempDirectory("graft-degen-emb").toString
+    spark.createDataFrame(rows.asJava,
+        StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"))
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    d
+  }
+
+  private def pca(dir: String): Seq[(Int, Option[Long], Option[Double])] =
+    operators.Similarity.pcaPower(spark, dir).collect().toSeq.map(r =>
+      (r.getInt(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(_.asInstanceOf[Double])))
+
+  // the expected rows below are what SparkEntry.oracleSql("q167_pca_power")
+  // returns in DuckDB 1.0.0 on the same tables
+  test("q167 on an empty embeddings table returns the oracle's empty answer") {
+    import org.apache.spark.sql.Row
+    val empty = embeddingsDir(Nil)
+    assert(operators.Similarity.pcaPower(spark, empty).columns.toSeq ==
+      Seq("dim", "vq", "loading"))
+    assert(pca(empty).isEmpty)
+    // only null and empty embeddings: no cells either
+    assert(pca(embeddingsDir(Seq(Row(1L, null, 0), Row(2L, Seq.empty[Float], 0)))).isEmpty)
+  }
+
+  test("q167: a null embedding contributes nothing and a null element counts as 0, " +
+      "as unnest does in the oracle") {
+    import org.apache.spark.sql.Row
+    val want = Seq((1, Some(465565L), Some(0.465565)), (2, Some(885014L), Some(0.885014)))
+    assert(pca(embeddingsDir(Seq(
+      Row(1L, Seq(1.0f, 2.0f), 0), Row(2L, null, 0), Row(3L, Seq(0.5f, null), 0)))) == want)
+    assert(pca(embeddingsDir(Seq(
+      Row(1L, Seq(1.0f, 2.0f), 0), Row(3L, Seq(0.5f, 0.0f), 0)))) == want)
+  }
+
+  test("q167 on an all-zero corpus returns the oracle's NULL iterate, not an exception") {
+    import org.apache.spark.sql.Row
+    // t·1e6/sqrt(0) is a division by zero, NULL in the oracle, and a NULL
+    // iterate stays NULL through the later iterations
+    val zeros = embeddingsDir(Seq(
+      Row(1L, Seq(0.0f, 0.0f, 0.0f), 0), Row(2L, Seq(0.0f, 0.0f, 0.0f), 0)))
+    assert(pca(zeros) == (1 to 3).map(d => (d, None, None)))
   }
 }

@@ -43,6 +43,74 @@ class HttpFrontendSpec extends AnyFunSuite {
     } finally f.stop()
   }
 
+  /** One POST on a raw socket, so a test controls the headers and the body
+    * framing; returns the response status. */
+  private def rawPost(port: Int, headers: String)(writeBody: java.io.OutputStream => Unit): Int = {
+    val s = new java.net.Socket("127.0.0.1", port)
+    try {
+      s.setSoTimeout(60000)
+      val out = new java.io.BufferedOutputStream(s.getOutputStream)
+      out.write(s"POST /receive HTTP/1.1\r\nHost: 127.0.0.1\r\n$headers\r\n".getBytes("US-ASCII"))
+      writeBody(out)
+      out.flush()
+      val status = new java.io.BufferedReader(
+        new java.io.InputStreamReader(s.getInputStream, "US-ASCII")).readLine()
+      status.split(" ")(1).toInt
+    } finally s.close()
+  }
+
+  test("bodies over MaxBodyBytes get 413, by raw size or by snappy-declared size") {
+    val dir = Files.createTempDirectory("graft-http-").toString
+    val f = new HttpFrontend(dir, 0)
+    f.start()
+    try {
+      val port = f.boundPort
+      val max = HttpFrontend.MaxBodyBytes
+      // a declared Content-Length over the cap: refused before any byte is read
+      assert(rawPost(port, s"Content-Length: ${max + 1L}\r\n")(_ => ()) == 413)
+      // a chunked stream that runs past the cap: refused once it does
+      assert(rawPost(port, "Transfer-Encoding: chunked\r\n") { out =>
+        val chunk = new Array[Byte](1 << 20)
+        var left = max + 1L
+        while (left > 0) {
+          val n = math.min(left, chunk.length.toLong).toInt
+          out.write(s"${n.toHexString}\r\n".getBytes("US-ASCII"))
+          out.write(chunk, 0, n)
+          out.write("\r\n".getBytes("US-ASCII"))
+          left -= n
+        }
+        out.write("0\r\n\r\n".getBytes("US-ASCII"))
+      } == 413)
+      // a 9-byte snappy frame whose header declares max + 1 decompressed
+      // bytes: refused from the header, before any decompression
+      val bomb = {
+        val b = Array.newBuilder[Byte]
+        var v = max + 1
+        while (v >= 0x80) { b += ((v & 0x7f) | 0x80).toByte; v >>>= 7 }
+        b += v.toByte
+        b ++= Array[Byte](0x0c, 'a', 'b', 'c', 'd')
+        b.result()
+      }
+      assert(bomb.length == 9)
+      assert(post(port, bomb) == 413)
+      assert(BodyStream.list(dir).isEmpty, "nothing oversized was admitted")
+      assert(post(port, body(TimeSeries(Map("__name__" -> "up"), Seq(Sample(1.0, 10L))))) == 200)
+    } finally f.stop()
+  }
+
+  test("the benchmark's corrupt bodies still get 400: an unreadable snappy length, " +
+      "and protobuf wire type 7") {
+    val dir = Files.createTempDirectory("graft-http-").toString
+    val f = new HttpFrontend(dir, 0)
+    f.start()
+    try {
+      assert(post(f.boundPort, Array.fill[Byte](64)(0xFF.toByte)) == 400)
+      assert(post(f.boundPort, org.xerial.snappy.Snappy.compress(
+        Array[Byte](0x0F, 0x01, 0x02, 0x03, 0x04, 0x05, 0x06, 0x07))) == 400)
+      assert(BodyStream.list(dir).isEmpty)
+    } finally f.stop()
+  }
+
   test("concurrent POSTs admit in some total order with no gaps, overwrites, or losses") {
     val dir = Files.createTempDirectory("graft-http-").toString
     val f = new HttpFrontend(dir, 0)

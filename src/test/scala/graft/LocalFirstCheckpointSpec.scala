@@ -84,10 +84,11 @@ class LocalFirstCheckpointSpec extends AnyFunSuite {
       try {
         writeBodies(0, 6)
         drain()
-        // registration keeps a manager the session already names
+        // StreamSession.prepare keeps a manager the session already names
         assert(spark.conf.get(Key) == classOf[FileContextBasedCheckpointFileManager].getName)
       } finally spark.conf.unset(Key)
 
+      // with the key unset, the start sites' StreamSession.prepare sets it
       writeBodies(6, 12)
       drain()
       assert(spark.conf.get(Key) == classOf[LocalFirstCheckpointFileManager].getName)

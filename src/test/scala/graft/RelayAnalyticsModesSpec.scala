@@ -326,6 +326,56 @@ class RelayAnalyticsModesSpec extends AnyFunSuite {
     }
   }
 
+  test("--state-changelog: two drains over one checkpoint give the snapshot-mode rate totals") {
+    // RelayMain --state-changelog sets this key on the session builder; each
+    // side runs on a session of its own, with RocksDB like RelayMain
+    def session(changelog: Boolean) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      s.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        changelog.toString)
+      s
+    }
+    val sides = Seq(false, true).map { changelog =>
+      (session(changelog),
+        Files.createTempDirectory("ra-clog-out-").toString + "/analytics-rate",
+        Files.createTempDirectory("ra-clog-ckpt-").toString)
+    }
+    val inDir = Files.createTempDirectory("ra-clog-in-").toString
+    // six counters; the second wave resets the odd ones
+    def wave(w: Int): Array[Byte] = body((0 until 6).map { c =>
+      val (v0, step) = if (w == 1 || c % 2 == 0) (10.0 * c + 5 * w, 1.5) else (1.0, 0.5)
+      TimeSeries(Map("__name__" -> "reqs", "job" -> s"j$c"),
+        (0 until 4).map(k => Sample(v0 + k * step, (w * 10 + k) * 1000L)))
+    }: _*)
+    val f = new HttpFrontend(inDir, 0)
+    f.start()
+    try for (w <- 1 to 2) {
+      assert(post(f.boundPort, wave(w)) == 200)
+      for ((s, out, ckpt) <- sides) {
+        val q = RelayMain.startAnalytics(s, RemoteWrite.bodyDsv2Stream(s, inDir), "rate",
+          outDir = out, checkpointDir = ckpt, trigger = Trigger.AvailableNow())
+        try q.processAllAvailable() finally q.stop()
+      }
+    } finally f.stop()
+
+    val schema = StructType.fromDDL(
+      "name STRING, user_id BIGINT, n_samples BIGINT, n_resets BIGINT, " +
+        "n_late BIGINT, total_increase DOUBLE, rate_per_sec DOUBLE")
+    val Seq(snapshot, changelog) = sides.map { case (_, out, _) =>
+      spark.read.schema(schema).json(out).collect().toSeq
+        .groupBy(_.getAs[Long]("user_id")).values
+        .map(_.maxBy(_.getAs[Long]("n_samples")))
+        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_samples"),
+          r.getAs[Long]("n_resets"), r.getAs[Double]("total_increase")))
+        .toSeq.sortBy(_._1)
+    }
+    assert(snapshot.size == 6 && snapshot.forall(_._2 == 8L), snapshot)
+    assert(snapshot.map(_._3).sum == 3L, "the three odd counters reset once each")
+    assert(changelog == snapshot)
+  }
+
   test("POST → compact analytic JSON: latest value per series, restart keeps versions") {
     withRocksDb {
       val inDir = Files.createTempDirectory("ra-cpt-in-").toString
