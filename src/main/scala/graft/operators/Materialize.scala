@@ -50,13 +50,6 @@ object Materialize {
     }))
   }
 
-  /** Drop every registry entry so the next consumer rebuilds from
-    * scratch — the cold-bench hook (SPARK_GRAFT_BENCH_COLD): a fresh
-    * process has an empty registry, and an honest cold number must pay
-    * the artifact build exactly as that process would. Temp dirs stay on
-    * disk until the JVM-exit sweep (rebuilds land in new dirs). */
-  def reset(): Unit = cache.clear()
-
   /** Snapshot id of an input file/dir: names, lengths, mtimes — one
     * directory listing, changes whenever the input is rewritten, which is
     * exactly the staleness the cache key must observe. */

@@ -912,7 +912,9 @@ object Similarity extends QueryModule {
     * equivalence is exact, not approximate:
     *   t_d = Σ_r (Σ_e x_re·v_e)·x_rd = Σ_e (Σ_r x_rd·x_re)·v_e = (G·v)_d
     * — every product and sum is an exact integer (partition partials
-    * bound by rows/task × (100·|x|)² ≪ 2⁶³; the cross-partition sum and
+    * use Math.multiplyExact/addExact, so a partial past 2⁶³ fails with
+    * an ArithmeticException, where the oracle's own BIGINT `sq * xq` has
+    * already overflowed; the cross-partition sum and
     * the driver matvec are DECIMAL(38,0)/BigInt), so iterates stay
     * bit-identical to the oracle's unrolled relational form, and the
     * normalization reproduces Spark's own FP sequence op-for-op
@@ -944,7 +946,11 @@ object Similarity extends QueryModule {
           val xa = x(a)
           if (xa != 0L) {
             var b = a
-            while (b < x.length) { g(a * d + b) += xa * x(b); b += 1 }
+            while (b < x.length) {
+              // exact or a typed ArithmeticException, never a silent wrap
+              g(a * d + b) = Math.addExact(g(a * d + b), Math.multiplyExact(xa, x(b)))
+              b += 1
+            }
           }
           a += 1
         }

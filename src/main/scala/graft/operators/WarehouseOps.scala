@@ -382,9 +382,9 @@ object WarehouseOps extends QueryModule {
     * explosion plus a support count — before ever starting their loops;
     * the backbone is exactly the edge table a graph warehouse keeps next
     * to [[userItems]] (same q117/q119 codebook discipline, same snapshot
-    * key, rebuilt per process and on any input rewrite; cold bench resets
-    * it). q134 — whose DECLARED computation is this very edge derivation —
-    * and q152 keep computing it in-plan. */
+    * key, rebuilt per process and on any input rewrite). q134 — whose
+    * DECLARED computation is this very edge derivation — and q152 keep
+    * computing it in-plan. */
   private def coEdgesM(spark: SparkSession, dir: String, minUsers: Int): DataFrame =
     spark.read.parquet(Materialize.parquetDir(
       s"co-edges:$dir@${Materialize.snapshot(s"$dir/events.parquet")}:m$minUsers",
@@ -522,8 +522,8 @@ object WarehouseOps extends QueryModule {
     * equals the fixpoint only when convergence happens within the budget
     * — a deep structure (a chain hanging off the core peels ONE node per
     * round) silently returns a superset. The loop now runs until the
-    * post-peel edge count stops shrinking and emits the CONVERGENCE
-    * WITNESS as a `rounds_used` column (number of rounds that removed
+    * post-peel edge count stops shrinking and emits the convergence
+    * witness as a `rounds_used` column (number of rounds that removed
     * at least one edge), so a result can prove it is the fixpoint.
     * Montresor et al. 2013 measure O(log n)-ish round counts (~10-100)
     * on real web graphs; `maxRounds` is a runaway backstop far above
@@ -1728,7 +1728,7 @@ object WarehouseOps extends QueryModule {
         |LEFT JOIN rk ON rk.segment = cut.segment AND rk.grank = cut.r_d
         |JOIN g ON g.segment = cut.segment
         |ORDER BY 1, 2""".stripMargin,
-    // Unrolled peel at the WITNESSED round count (VERDICT r13 #6): at the
+    // Unrolled peel at the witnessed round count (VERDICT r13 #6): at the
     // verify SF the support-filtered co-occurrence graph's minimum degree
     // is already >= 3, so the fixpoint loop converges in 0 effective
     // rounds (measured via an iterative DuckDB replay of the peel) and

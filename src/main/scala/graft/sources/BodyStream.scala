@@ -26,8 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - exactly replayable: any [start, end) range always maps to the same
   *     bodies (files are append-only, names monotonic — the same contract
   *     Kafka offsets or the reference's implicit channel ordering rely on);
-  *   - checkpointable: the offset serializes as the plain number, so a
-  *     restarted query resumes at the first unprocessed body
+  *   - checkpointable: the offset serializes as JSON (`seq`, `hwm`,
+  *     `base`, see [[BodySeqOffset]]), so a restarted query resumes at the
+  *     first unprocessed body
   *     (improving on the reference's lossy SIGTERM path, `main.go:114-119`).
   *
   * Admission control: `maxFilesPerTrigger` bounds each micro-batch — the
@@ -110,41 +111,34 @@ object BodyStream {
     * first unarchived file; not worth it while the only sanctioned writer
     * is the frontend's monotonic counter, whose names cannot sort below an
     * admitted hwm at all. With no archival (base floor intact) the check
-    * is exact.
-    *
-    * Legacy plain-number offsets (pre-hwm checkpoints) have no name to
-    * anchor on: they keep the absolute mapping and the append-only rule
-    * (length check only; archival requires an hwm-bearing offset) — and
-    * are upgraded to the anchored form by the next latestOffset call, idle
-    * or not. */
+    * is exact. The initial offset (seq 0, empty hwm) anchors at index 0. */
   def boundaryIndex(listing: Vector[String], off: BodySeqOffset, dir: String): Int = {
     import scala.collection.Searching.{Found, InsertionPoint}
-    if (off.hwm.isEmpty) {
-      if (listing.length < off.seq) throw new IllegalStateException(
-        s"remote-write-bodies: directory `$dir` lists ${listing.length} bodies but " +
-          s"offset ${off.seq} is committed — files were deleted or compacted. " +
-          "A legacy (plain-number) offset carries no high-water-mark name, so the " +
-          "directory must stay append-only; archival needs a current-format checkpoint.")
-      Math.toIntExact(off.seq)
-    } else {
-      val k = listing.search(off.hwm) match {
-        case Found(i) => i + 1
-        case InsertionPoint(i) => i
-      }
-      val expected = off.seq - off.base
-      if (k > expected) throw new IllegalStateException(
-        s"remote-write-bodies: ${k - expected} file(s) sorting at or before the " +
-          s"committed high-water mark `${off.hwm}` of `$dir` appeared after it was " +
-          "admitted — non-monotonic names (e.g. unpadded counters) re-map committed " +
-          "ranges and would be silently skipped. Refusing to replay.")
-      if (k > 0 && listing(k - 1) != off.hwm) throw new IllegalStateException(
-        s"remote-write-bodies: committed high-water mark `${off.hwm}` is missing " +
-          s"from `$dir` while $k earlier-sorting file(s) remain — archival must " +
-          "remove processed bodies front-to-back (the hwm file goes last). " +
-          "Refusing to replay a re-mapped range.")
-      k
+    val k = listing.search(off.hwm) match {
+      case Found(i) => i + 1
+      case InsertionPoint(i) => i
     }
+    val expected = off.seq - off.base
+    if (k > expected) throw new IllegalStateException(
+      s"remote-write-bodies: ${k - expected} file(s) sorting at or before the " +
+        s"committed high-water mark `${off.hwm}` of `$dir` appeared after it was " +
+        "admitted — non-monotonic names (e.g. unpadded counters) re-map committed " +
+        "ranges and would be silently skipped. Refusing to replay.")
+    if (k > 0 && listing(k - 1) != off.hwm) throw new IllegalStateException(
+      s"remote-write-bodies: committed high-water mark `${off.hwm}` is missing " +
+        s"from `$dir` while $k earlier-sorting file(s) remain — archival must " +
+        "remove processed bodies front-to-back (the hwm file goes last). " +
+        "Refusing to replay a re-mapped range.")
+    k
   }
+
+  /** The retention-floor file a reader publishes in the body directory:
+    * `_archive_floor-` plus 16 hex digits of its checkpoint location's
+    * SHA-1, so each reader of a shared directory has its own floor and a
+    * restarted reader rewrites the same one. */
+  def floorName(checkpointLocation: String): String =
+    "_archive_floor-" + java.security.MessageDigest.getInstance("SHA-1")
+      .digest(checkpointLocation.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
 
   /** One task = one file group; each file is read whole, exactly like the
     * reference's `io.ReadAll(r.Body)` (`kinesis.go:69`). */
@@ -204,7 +198,7 @@ class BodyTable(dir: String, maxFilesPerTrigger: Int)
 class BodyScan(dir: String, maxFilesPerTrigger: Int) extends Scan {
   override def readSchema(): StructType = BodyStream.schema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new BodyMicroBatchStream(dir, maxFilesPerTrigger)
+    new BodyMicroBatchStream(dir, maxFilesPerTrigger, checkpointLocation)
   /** Batch read of everything currently in the directory — lets the same
     * source back offline reprocessing (`spark.read.format(...)`). */
   override def toBatch: Batch = new Batch {
@@ -225,6 +219,7 @@ class BodyScan(dir: String, maxFilesPerTrigger: Int) extends Scan {
   * loudly instead of replaying wrong bodies. */
 case class BodySeqOffset(seq: Long, hwm: String, base: Long = 0L) extends Offset {
   require(base >= 0L && base <= seq, s"archival base $base outside [0, $seq]")
+  require(seq == 0L || hwm.nonEmpty, s"offset $seq admits bodies but names no high-water mark")
   override def json(): String =
     s"""{"seq":$seq,"hwm":"${BodySeqOffset.esc(hwm)}","base":$base}"""
 }
@@ -236,36 +231,27 @@ object BodySeqOffset {
     case c => c.toString
   }
   private val JsonForm =
-    """\{"seq":(\d+),"hwm":"((?:[^"\\]|\\.)*)"(?:,"base":(\d+))?\}""".r
+    """\{"seq":(\d+),"hwm":"((?:[^"\\]|\\.)*)","base":(\d+)\}""".r
 
-  /** Accepts the current JSON form, the round-5 form without `base`
-    * (base = 0: nothing was archived before this feature existed), and the
-    * legacy plain-number form written by pre-hwm checkpoints (which then
-    * gets the weaker length-only check). */
+  /** Accepts exactly the form [[BodySeqOffset.json]] writes. Anything else
+    * (a plain number, a missing or future field, reordered keys, a number
+    * past Long range) fails as "unrecognized offset", never as an opaque
+    * NumberFormatException. */
   def parse(json: String): BodySeqOffset = json.trim match {
-    case JsonForm(seq, hwm, base) =>
+    case JsonForm(seq, hwm, base) if seq.toLongOption.isDefined && base.toLongOption.isDefined =>
       BodySeqOffset(seq.toLong,
-        hwm.replace("\\\"", "\"").replace("\\\\", "\\"),
-        Option(base).map(_.toLong).getOrElse(0L))
-    // the legacy plain-number form ONLY — anything else (a future field,
-    // reordered keys) must fail as "unrecognized offset", not as an
-    // opaque NumberFormatException from toLong (review catch). ADVICE r19:
-    // ASCII digits only (Character.isDigit admits Unicode digit classes
-    // that toLong rejects) and overflow routed through toLongOption, so a
-    // 20-digit number fails as "unrecognized offset" too, never as a raw
-    // NumberFormatException.
-    case legacy if legacy.nonEmpty && legacy.forall(c => c >= '0' && c <= '9')
-        && legacy.toLongOption.isDefined =>
-      BodySeqOffset(legacy.toLong, "")
+        hwm.replace("\\\"", "\"").replace("\\\\", "\\"), base.toLong)
     case other => throw new IllegalArgumentException(
       s"unrecognized body-stream offset format: '$other' — expected " +
-        """{"seq":N,"hwm":"...","base":N} or a legacy plain number; """ +
+        """{"seq":N,"hwm":"...","base":N}; """ +
         "was the checkpoint written by a newer version?")
   }
 }
 
-class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int)
+class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int, checkpointLocation: String)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
+
+  private val floorName = BodyStream.floorName(checkpointLocation)
 
   /** Under Trigger.AvailableNow the engine asks us to pin "available" at
     * query start; batches then drain up to this fence in
@@ -321,23 +307,9 @@ class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int)
     }
     val endSeq = math.max(s.seq, end)
     val hwm =
-      if (endSeq == 0L) ""
-      else if (endSeq == s.seq) {
-        // idle trigger on a legacy (hwm-less) checkpoint: upgrade it anyway.
-        // boundaryIndex already proved the listing covers seq, so
-        // listing(seq − 1) IS the last admitted body (legacy ⇒ base = 0,
-        // append-only enforced). Without this, an idle stream would sit on
-        // the weaker length-only validation — and stay ineligible for
-        // archival — until new bodies arrive (round-7 ADVICE).
-        if (s.hwm.isEmpty && listing.length >= s.seq)
-          listing(Math.toIntExact(s.seq) - 1)
-        else s.hwm
-      }
+      if (endSeq == s.seq) s.hwm
       else listing(Math.toIntExact(endSeq - newBase) - 1)
-    // an hwm-less result can only be seq = 0 (any seq > 0 path above
-    // anchored an hwm, idle included); base stays 0 until an hwm exists
-    val base = if (hwm.isEmpty) 0L else newBase
-    BodySeqOffset(endSeq, hwm, base)
+    BodySeqOffset(endSeq, hwm, newBase)
   }
 
   /** Listing from this trigger's latestOffset, reused by the immediately
@@ -367,8 +339,8 @@ class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int)
       s"remote-write-bodies: batch [${s.seq}, ${e.seq}) needs $endIdx listed bodies " +
         s"in `$dir` but only ${listing.length} are present — files from an " +
         "uncommitted batch were removed. Archive only below the committed floor " +
-        "(see `_archive_floor`).")
-    if (n > 0 && e.hwm.nonEmpty && listing(endIdx - 1) != e.hwm)
+        "(see `_archive_floor-*`).")
+    if (n > 0 && listing(endIdx - 1) != e.hwm)
       throw new IllegalStateException(
         s"remote-write-bodies: committed offset ${e.seq} expects `${e.hwm}` at the " +
           s"batch end boundary of `$dir` but found `${listing(endIdx - 1)}` — the " +
@@ -380,30 +352,36 @@ class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int)
 
   override def createReaderFactory(): PartitionReaderFactory = BodyStream.ReaderFactory
 
-  /** Publishes the retention floor: atomically (re)writes `_archive_floor`
-    * in the body directory with the committed offset's JSON. An external
-    * archiver may move to cold storage any files sorting AT OR BELOW the
-    * floor's `hwm`, front-to-back (the hwm file last) — committed offsets
-    * re-anchor via [[BodyStream.boundaryIndex]], so the stream keeps running
-    * through archival with no checkpoint reset (the round-5 design limit,
-    * SURVEY §7.2 item 2). Underscore prefix keeps the marker out of
-    * [[BodyStream.list]]. One caveat rides with the frontend: it resumes
-    * numbering from the last LISTED name, so an archiver should leave the
-    * newest body (or the frontend counter must persist) to keep names
-    * ascending across a full drain — violations trip the boundary check
-    * loudly. */
+  /** Publishes this reader's retention floor: atomically (re)writes its
+    * own `_archive_floor-<id>` file ([[BodyStream.floorName]]) in the body
+    * directory with the committed offset's JSON. Every reader of the
+    * directory (the relay and an analytics twin, say) publishes one, so an
+    * external archiver takes the MINIMUM `hwm` over all `_archive_floor-*`
+    * files and may move to cold storage the files sorting at or below it,
+    * front-to-back (the hwm file last). Honouring one reader's floor alone
+    * would remove bodies a slower reader has not read, and that reader
+    * would then skip them without error. A floor left by a reader that is
+    * gone for good holds archival back until it is deleted. Committed
+    * offsets re-anchor via [[BodyStream.boundaryIndex]], so the stream
+    * keeps running through archival with no checkpoint reset. Underscore
+    * prefix keeps the floors out of [[BodyStream.list]]. One caveat rides
+    * with the frontend: it resumes numbering from the last LISTED name, so
+    * an archiver should leave the newest body (or the frontend counter
+    * must persist) to keep names ascending across a full drain —
+    * violations trip the boundary check loudly. */
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[BodySeqOffset]
     if (e.hwm.nonEmpty) {
-      // sweep temp files a crashed prior commit left behind (review
-      // catch: dot-prefixed, so list() hides them and nothing else ever
-      // cleans them) — commit is driver-side single-writer, no race
+      // sweep temp files a crashed prior commit of THIS reader left behind
+      // (dot-prefixed, so list() hides them and nothing else cleans them);
+      // another reader's temp file may be in flight, so leave it alone
+      val tmpPrefix = s".$floorName-"
       graft.Tfs.local.list(dir)
-        .filter(e => e.name.startsWith(".floor-") && e.name.endsWith(".tmp"))
+        .filter(e => e.name.startsWith(tmpPrefix) && e.name.endsWith(".tmp"))
         .foreach(e => Files.deleteIfExists(Paths.get(e.path)))
-      val tmp = Files.createTempFile(Paths.get(dir), ".floor-", ".tmp")
+      val tmp = Files.createTempFile(Paths.get(dir), tmpPrefix, ".tmp")
       Files.write(tmp, e.json().getBytes("UTF-8"))
-      Files.move(tmp, Paths.get(dir, "_archive_floor"),
+      Files.move(tmp, Paths.get(dir, floorName),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.{Prompb, RemoteWrite}
 import graft.sources.Prompb.{Sample, TimeSeries}
 import graft.streaming.{CollectingSink, RelayPipeline}
@@ -78,17 +80,19 @@ class BodyStreamSourceSpec extends AnyFunSuite {
     assert(sink2.allLines.head.contains(""""name":"y""""))
   }
 
-  test("offset json roundtrips, including the legacy plain-number form") {
+  test("offset json roundtrips; a plain number is rejected") {
     import graft.sources.BodySeqOffset
-    val o = BodySeqOffset(7L, """we"ird\name.bin""")
+    val o = BodySeqOffset(7L, """we"ird\name.bin""", 2L)
     assert(BodySeqOffset.parse(o.json()) == o)
-    assert(BodySeqOffset.parse("42") == BodySeqOffset(42L, "")) // pre-hwm checkpoint
     assert(BodySeqOffset.parse(BodySeqOffset(0L, "").json()) == BodySeqOffset(0L, ""))
-    // ADVICE r19: the legacy guard must route Unicode digits (isDigit
-    // accepts them, toLong does not) and Long overflow through the TYPED
-    // "unrecognized offset" error, never a raw NumberFormatException
-    for (bad <- Seq("٤٢" /* Arabic-Indic 42 */,
-                    "99999999999999999999" /* > Long.MaxValue */)) {
+    // only the written form parses: plain numbers (ASCII or Unicode
+    // digits, in or past Long range), a base-less form and an overflowing
+    // seq all fail with the TYPED "unrecognized offset" error, never a raw
+    // NumberFormatException
+    for (bad <- Seq("42", "٤٢" /* Arabic-Indic 42 */,
+                    "99999999999999999999" /* > Long.MaxValue */,
+                    """{"seq":3,"hwm":"00000002.bin"}""",
+                    """{"seq":99999999999999999999,"hwm":"x","base":0}""")) {
       val e = intercept[IllegalArgumentException](BodySeqOffset.parse(bad))
       assert(e.getMessage.contains("unrecognized"), s"for input '$bad': $e")
     }
@@ -146,38 +150,12 @@ class BodyStreamSourceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("non-monotonic"))
   }
 
-  test("offset contract: legacy plain-number offsets keep the append-only rule") {
-    import graft.sources.{BodySeqOffset, BodyStream}
-    val dir = Files.createTempDirectory("graft-bodies-").toString
-    threeBodies(dir)
-    val legacy = BodySeqOffset(3L, "") // pre-hwm checkpoint: no anchor name
-    assert(BodyStream.boundaryIndex(BodyStream.list(dir), legacy, dir) == 3)
-    // with no hwm to re-anchor on, archival is indistinguishable from loss
-    Files.delete(Paths.get(dir, "00000000.bin"))
-    val e = intercept[IllegalStateException](
-      BodyStream.boundaryIndex(BodyStream.list(dir), legacy, dir))
-    assert(e.getMessage.contains("deleted or compacted"))
-  }
-
-  test("idle trigger upgrades a legacy hwm-less offset to the anchored form") {
-    import graft.sources.{BodySeqOffset, BodyStream => BS}
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    val dir = Files.createTempDirectory("graft-bodies-").toString
-    threeBodies(dir)
-    val stream = new graft.sources.BodyMicroBatchStream(dir,
-      maxFilesPerTrigger = 1000)
-    // pre-hwm checkpoint, already caught up: an idle trigger must anchor
-    // hwm = listing(seq-1) instead of leaving the weaker length-only check
-    // (and archival ineligibility) in place until new bodies arrive
-    val upgraded = stream.latestOffset(BodySeqOffset(3L, ""), ReadLimit.allAvailable())
-      .asInstanceOf[BodySeqOffset]
-    assert(upgraded === BodySeqOffset(3L, BS.list(dir).last, 0L))
-    // a NON-idle legacy trigger anchors on the newly admitted hwm as before
-    writeBodies(dir, Seq(body(TimeSeries(Map("__name__" -> "m3"),
-      Seq(Sample(3.0, 3L))))), from = 3)
-    val advanced = stream.latestOffset(BodySeqOffset(3L, ""), ReadLimit.allAvailable())
-      .asInstanceOf[BodySeqOffset]
-    assert(advanced === BodySeqOffset(4L, BS.list(dir).last, 0L))
+  /** Every reader's published retention floor in `dir`. */
+  private def floors(dir: String): Seq[graft.sources.BodySeqOffset] = {
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith("_archive_floor"))
+      .map(p => graft.sources.BodySeqOffset.parse(Files.readString(p))).toVector
+    finally s.close()
   }
 
   test("archiver honors the published floor; restart resumes past archived bodies") {
@@ -199,9 +177,7 @@ class BodyStreamSourceSpec extends AnyFunSuite {
     assert(sink1.allLines.size == 2)
 
     // archive exactly what the published floor covers, front-to-back
-    val floorPath = Paths.get(dir, "_archive_floor")
-    assert(Files.exists(floorPath))
-    val floor = BodySeqOffset.parse(Files.readString(floorPath))
+    val Seq(floor) = floors(dir)
     assert(floor.seq >= 1L && floor.hwm.nonEmpty)
     BodyStream.list(dir).takeWhile(_ <= floor.hwm)
       .foreach(f => Files.delete(Paths.get(dir, f)))
@@ -217,6 +193,52 @@ class BodyStreamSourceSpec extends AnyFunSuite {
     // exactly the new body — no replay attempt against archived files
     assert(sink2.allLines.size == 1)
     assert(sink2.allLines.head.contains(""""name":"fresh""""))
+  }
+
+  test("two readers of one directory: archiving to the lowest floor loses no body") {
+    import graft.sources.BodyStream
+    import graft.streaming.RelayMain
+    val in = Files.createTempDirectory("graft-bodies-").toString
+    val relayCkpt = Files.createTempDirectory("graft-ckpt-relay-").toString
+    val rateCkpt = Files.createTempDirectory("graft-ckpt-rate-").toString
+    val rateOut = Files.createTempDirectory("graft-rate-").toString + "/out"
+    val sink = new CollectingSink
+    // body i: one counter sample, value i + 1 at (i + 1) s
+    def wave(from: Int, until: Int): Unit = writeBodies(in, (from until until).map(i =>
+      body(TimeSeries(Map("__name__" -> "reqs"), Seq(Sample(i + 1.0, (i + 1) * 1000L))))),
+      from)
+    // two bodies per micro-batch, so each drain commits (and publishes a
+    // floor for) its first batch before it stops
+    def relay(): Unit = RelayPipeline.start(spark,
+      RemoteWrite.bodyDsv2Stream(spark, in, maxFilesPerTrigger = 2), sink,
+      trigger = Trigger.AvailableNow(), checkpointDir = Some(relayCkpt)).awaitTermination(60000)
+    // the rate twin's transformWithState state needs RocksDB
+    def rate(): Unit = {
+      val key = "spark.sql.streaming.stateStore.providerClass"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      try RelayMain.startAnalytics(spark,
+          RemoteWrite.bodyDsv2Stream(spark, in, maxFilesPerTrigger = 2), "rate",
+          outDir = rateOut, checkpointDir = rateCkpt, trigger = Trigger.AvailableNow())
+        .awaitTermination(60000)
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+
+    wave(0, 4); relay(); rate()
+    wave(4, 8); relay() // rate lags by one wave
+    // an archiver takes the lowest published floor and keeps the newest body
+    val floor = floors(in).map(_.hwm).min
+    val newest = BodyStream.list(in).last
+    BodyStream.list(in).takeWhile(n => n <= floor && n != newest)
+      .foreach(n => Files.delete(Paths.get(in, n)))
+    rate()
+
+    val nSamples = spark.read.schema("name STRING, n_samples BIGINT").json(rateOut)
+      .collect().map(_.getLong(1)).max
+    assert(nSamples == 8L, "the lagging reader read every body")
+    assert(sink.allLines.size == 8)
+    assert(floors(in).size == 2, "one floor per reader")
   }
 
   test("partitions: contiguous groups, at most P, sizes within one, seq order kept") {

@@ -122,13 +122,14 @@ class DegenerateInputSpec extends AnyFunSuite {
     assert(pr.collect().isEmpty)
   }
 
-  /** An embeddings table of these rows, as the fixtures' parquet. */
+  /** An embeddings table of these rows in one parquet part, like the
+    * fixtures' single file (so a read puts all rows in one partition). */
   private def embeddingsDir(rows: Seq[org.apache.spark.sql.Row]): String = {
     import org.apache.spark.sql.types.StructType
     val d = java.nio.file.Files.createTempDirectory("graft-degen-emb").toString
     spark.createDataFrame(rows.asJava,
         StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"))
-      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$d/embeddings.parquet")
     d
   }
 
@@ -166,5 +167,21 @@ class DegenerateInputSpec extends AnyFunSuite {
     val zeros = embeddingsDir(Seq(
       Row(1L, Seq(0.0f, 0.0f, 0.0f), 0), Row(2L, Seq(0.0f, 0.0f, 0.0f), 0)))
     assert(pca(zeros) == (1 to 3).map(d => (d, None, None)))
+  }
+
+  test("q167: a Gram partial past Long range fails with an ArithmeticException, not a wrap") {
+    import org.apache.spark.sql.Row
+    // xq = 2·10⁹, so each product 4·10¹⁸ fits a Long but three of them
+    // summed in one partition do not; the oracle's BIGINT sq·xq (about
+    // 4·10²⁴) overflows there too
+    def arithmetic(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException])
+    val sumPast = intercept[Exception](pca(embeddingsDir(
+      (1L to 3L).map(i => Row(i, Seq(2.0e7f), 0)))))
+    assert(arithmetic(sumPast), sumPast)
+    // one product past Long range (xq = 4·10⁹) fails the same way
+    val productPast = intercept[Exception](pca(embeddingsDir(Seq(Row(1L, Seq(4.0e7f), 0)))))
+    assert(arithmetic(productPast), productPast)
   }
 }

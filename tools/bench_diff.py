@@ -3,28 +3,12 @@
 a previous round's snapshot (BENCH_r*.json or another bench_out.json).
 
 Usage: python3 tools/bench_diff.py [old] [new] [--tol PCT]
-  old  default BENCH_r04.json   (driver snapshot; JSON line is inside "tail")
+  old  default BENCH_r05.json   (driver snapshot; JSON line is inside "tail")
   new  default bench_out.json   (what graft.Bench writes)
 
 Exit 1 if any shared query slowed by more than --tol percent (default 50 —
 wide because local[32] wall-clock jitters; the signal to act on is a query
 that doubles, not one that wobbles 20%).
-
---witness FILE: a SECOND independent measurement of the same code the old
-snapshot measured (in practice: the driver's own post-round bench run,
-archived as bench/driver_r*.json at the next round's start). Round-10
-incident: the r9 snapshot caught an unusually fast box window for four
-sub-second join queries (q13 0.27s) while the driver's independent run of
-the IDENTICAL code measured 0.62s; the next gate then flagged +79..92%
-"regressions" in code that had not changed, and they survived the warm
-best-of-5 because the snapshot itself was lucky, not the new run noisy.
-A true code regression is slower than BOTH witnesses of the old code; a
-flagged query within 1.3x OR within the 0.15s noise floor of the witness
-value is re-classified as snapshot drift and does not fail the gate. The
-absolute floor mirrors the flagging rule above (pct AND >0.15s): without
-it a 0.13s wobble on a 0.4s query — a delta too small to ever be FLAGGED
-— could still fail the witness ratio and the gate (round-20 incident:
-q105 at 0.55s vs witness 0.417s for bit-identical code, ratio 1.32).
 """
 import json
 import re
@@ -43,7 +27,8 @@ def load_queries(path):
             return v["queries"]
         if isinstance(v, str):
             m = re.search(r'\{"metric".*?"sf":"[^"]*"\}', v)
-            if m:
+            # a summary line (n_queries, queries_sha1) carries no times
+            if m and "queries" in json.loads(m.group(0)):
                 return json.loads(m.group(0))["queries"]
             # tail may be truncated mid-JSON: scrape the per-query pairs
             pairs = re.findall(r'"(q\d+_\w+)":([0-9][0-9.eE+-]*)', v)
@@ -59,24 +44,9 @@ def main():
     p.add_argument("new", nargs="?", default="bench_out.json")
     p.add_argument("--tol", type=float, default=50.0,
                    help="regression threshold in percent (default 50)")
-    p.add_argument("--witness", action="append", default=None,
-                   help="second measurement of the OLD code (driver run); "
-                        "flags within 1.3x of it are snapshot drift")
     ns = p.parse_args()
     tol = ns.tol
     old, new = load_queries(ns.old), load_queries(ns.new)
-    # Multiple --witness files compose per-query by MAX: each file is an
-    # independent measurement of the SAME old code, and the doctrine above
-    # is "a true code regression is slower than BOTH witnesses" — i.e. a
-    # flag survives only if it exceeds the slowest same-code measurement.
-    # (Round-20 incident: the gate's final adjudication passed ONLY the
-    # auto-witness, silently dropping the driver witness that had cleared
-    # two of the flagged queries in the step before.)
-    witness = {}
-    for wf in ns.witness or []:
-        for q, v in load_queries(wf).items():
-            if v is not None:
-                witness[q] = max(witness.get(q, 0.0), v)
     # failed queries are recorded as null — exclude from comparison, but report
     for q in sorted(k for k, v in new.items() if v is None):
         print(f"{q}: FAILED in new run (null timing)")
@@ -93,7 +63,7 @@ def main():
     # values by the cohort median ratio before applying the threshold.
     # Guard: with drift beyond x1.5 the run is too noisy to adjudicate at
     # all — refuse rather than normalize a possible global code slowdown
-    # away. (A global regression also shows against --witness totals.)
+    # away.
     all_ratios = sorted(new[q] / old[q] for q in shared if old[q])
     cohort = all_ratios[len(all_ratios) // 2] if len(all_ratios) >= 10 else 1.0
     if cohort > 1.5:
@@ -127,18 +97,6 @@ def main():
     if len(all_ratios) >= 10:
         print(f"cohort drift: median x{cohort:.2f} over {len(all_ratios)} "
               f"shared queries (flag thresholds scaled by it)")
-    if regressions and witness:
-        kept = []
-        for q, o, n, pct in regressions:
-            w = witness.get(q)
-            if w and (n <= w * 1.3 or n - w <= 0.15):
-                print(f"  {q}: snapshot drift, not code — new {n:.2f}s is "
-                      f"within 1.3x or the 0.15s noise floor of the "
-                      f"driver's {w:.2f}s for the same old code "
-                      f"(snapshot said {o:.2f}s)")
-            else:
-                kept.append((q, o, n, pct))
-        regressions = kept
     if regressions:
         print(f"\n{len(regressions)} regression(s) over {tol:.0f}% + 0.15s:")
         for q, o, n, pct in regressions:

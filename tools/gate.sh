@@ -1,9 +1,14 @@
 #!/usr/bin/env bash
-# Round gate (SURVEY §7.2 item 5): correctness + bench + per-query regression
-# diff against the previous round's snapshot, with the warm-rerun step the
-# round-5 q60 incident demanded — a single cold-run timing on this shared box
-# drifts up to ±2x, so a flagged regression is only believed after losing a
-# best-of-3 warm re-measure of just the flagged queries.
+# Round gate: the test suite, correctness, then the bench and a per-query
+# regression diff against the previous round's full snapshot. A single
+# timing on a shared box drifts, so a flagged query is re-measured alone,
+# best-of-5; a flag that survives the re-measure fails the gate.
+#
+# Steps: sbt test; graft.Verify at SF_VERIFY + tools/check.py --self-test;
+# the SURVEY tally; the sf0.001 oracle sweep (SWEEP=0 skips it); graft.Bench
+# at SF_BENCH; tools/bench_diff.py (over 50% AND over 0.15 s, thresholds
+# scaled by the cohort's median drift); the best-of-5 re-measure; the plan
+# fingerprints (tools/plan_diff.py, structural changes fail).
 #
 # Usage: tools/gate.sh              (defaults below)
 #   SF_VERIFY=/root/testdata/sf0.01 SF_BENCH=/root/testdata/sf0.1
@@ -11,10 +16,9 @@
 #
 # The regression diff runs against the PREVIOUS ROUND'S FULL committed
 # snapshot (bench/bench_r*.json — all queries), not the driver's BENCH_r*
-# tail whose per-query map is truncated (VERDICT r08 "What's wrong" #1: a
-# tail-only diff silently skipped the queries the tail cut off). On PASS,
-# ROUND=<NN> archives this round's full bench_out.json as
-# bench/bench_r<NN>.json so the next round has a full baseline too.
+# tail, which holds only the summary line. On PASS, ROUND=<NN> archives this
+# round's full bench_out.json as bench/bench_r<NN>.json so the next round
+# has a full baseline too.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 # Archive the gate's own transcript: VERDICT r09 "What's wrong" #3 — the
@@ -35,13 +39,6 @@ SF_BENCH=${SF_BENCH:-/root/testdata/sf0.1}
 # queries' regression diff (round-16 incident, fixed here).
 PREV=${PREV:-$(ls bench/bench_r*.json 2>/dev/null | grep -E 'bench_r[0-9]+[a-z]?\.json$' | sort -V | tail -1)}
 PREV=${PREV:-$(ls BENCH_r*.json 2>/dev/null | sort -V | tail -1)}
-# Second witness of the prior round's code: the driver's own post-round
-# bench run (bench_out.json as committed by the round tail, archived as
-# bench/driver_r*.json at round start). Round-10 incident: four join
-# queries flagged +79..92% vs an unusually-fast snapshot while matching
-# the driver's numbers for the identical code — drift, not regression.
-WITNESS=${WITNESS:-$(ls bench/driver_r*.json 2>/dev/null | sort -V | tail -1)}
-WITNESS_ARG=${WITNESS:+--witness $WITNESS}
 
 echo "== gate: test suite (sbt -batch test) =="
 # Round-7 shipped with Test/compile broken and nothing caught it (VERDICT r07
@@ -101,19 +98,8 @@ SPARK_GRAFT_SF_DIR=$SF_BENCH SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_BENCH_REPS=${BENCH_REPS:-3} \
   sbt -batch "runMain graft.Bench" || exit 1
 
-# Pre-armed drift watch-list (VERDICT r14 #7): this round's
-# judge-witnessed box-drift movers (r14: q72/q74/q76/q140 adjudicated by
-# the judge RUNNING the same-code witness — unchanged r13 code re-measured
-# at the same higher band; q187/q102 flagged alongside) plus the standing
-# pair-heavy dedup/graph cohort. The list is INFORMATIONAL ONLY
-# (ADVICE r13): it says where drift flags are expected, never what to
-# conclude. The adjudicating evidence for any flag — on these queries or
-# others — is always the same-code witness re-measure below
-# (bench_r<N>.commit → unchanged code re-timed under current box
-# conditions), not any stale reference number from a prior round.
-echo "== gate: drift watch-list (informational; adjudicate via same-code witness): q72 q74 q76 q140 q187 q102 q133 q134 q90 q88 =="
 echo "== gate: bench_diff vs $PREV =="
-diff_out=$(python3 tools/bench_diff.py "$PREV" bench_out.json $WITNESS_ARG)
+diff_out=$(python3 tools/bench_diff.py "$PREV" bench_out.json)
 rc=$?
 echo "$diff_out"
 if [ $rc -ne 0 ]; then
@@ -128,45 +114,11 @@ if [ $rc -ne 0 ]; then
     SPARK_GRAFT_BENCH_QUERIES=$flagged SPARK_GRAFT_BENCH_REPS=${BENCH_REPS_FLAGGED:-5} \
     SPARK_GRAFT_BENCH_OUT=/tmp/bench_flagged.json \
     sbt -batch "runMain graft.Bench" || exit 1
-  python3 tools/bench_diff.py "$PREV" /tmp/bench_flagged.json $WITNESS_ARG
-  rc=$?
-  if [ $rc -ne 0 ]; then
-    # Self-witnessing (round-12 incident, automated end-to-end): flags that
-    # survive the warm re-measure are either real regressions or box drift.
-    # If the previous snapshot recorded the commit it was built from
-    # (bench/bench_r<N>.commit, written at archive time below), re-measure
-    # that UNCHANGED code under current box conditions and let bench_diff
-    # adjudicate — no manual step left in the drift protocol.
-    flagged2=$(python3 tools/bench_diff.py "$PREV" /tmp/bench_flagged.json \
-      $WITNESS_ARG | sed -n 's/^REGRESSED: //p')
-    prev_commit_file="${PREV%.json}.commit"
-    # a "-dirty" marker means the snapshot's exact tree was never committed
-    # — nothing checkout-able to witness, fall through to the manual path
-    if [ -f "$prev_commit_file" ] && ! grep -q dirty "$prev_commit_file"; then
-      prev_commit=$(cat "$prev_commit_file")
-      echo "== gate: auto-witness — re-measuring UNCHANGED $prev_commit for [$flagged2] =="
-      # BOTH witnesses: the auto-witness only measured $flagged2, so the
-      # driver witness that cleared the OTHER flagged queries in the step
-      # above must ride along or they re-fail here with no witness at all
-      # (bench_diff composes repeated --witness per-query by max)
-      if tools/witness.sh "$prev_commit" "$flagged2" /tmp/witness_auto.json && \
-         python3 tools/bench_diff.py "$PREV" /tmp/bench_flagged.json \
-           --witness /tmp/witness_auto.json $WITNESS_ARG; then
-        echo "gate: surviving flags adjudicated as snapshot drift (same code, same speed now)"
-      else
-        echo "gate: FAIL — regression survives the same-code witness; fix before snapshot"
-        exit 1
-      fi
-    else
-      echo "gate: FAIL — regression survives a warm best-of-3; fix before snapshot"
-      echo "gate: no $prev_commit_file to auto-witness; adjudicate manually with"
-      echo "gate:   tools/witness.sh <prev-snapshot-commit> $flagged2"
-      echo "gate:   python3 tools/bench_diff.py $PREV bench_out.json --witness bench/witness_same_code.json"
-      exit 1
-    fi
-  else
-    echo "gate: flagged queries pass warm — cold-run noise, not a regression"
-  fi
+  python3 tools/bench_diff.py "$PREV" /tmp/bench_flagged.json || {
+    echo "gate: FAIL — regression survives a warm best-of-5; fix before snapshot"
+    exit 1
+  }
+  echo "gate: flagged queries pass warm — cold-run noise, not a regression"
 fi
 # Plan-fingerprint sweep (r14 addition; r15 hard-fail policy, VERDICT
 # r14 #4): one canonical hash + a structural feature string (join-strategy
@@ -203,17 +155,7 @@ if [ -n "${ROUND:-}" ]; then
   mkdir -p bench plans
   cp /tmp/plans_new.json "plans/plan_r${ROUND}.json"
   cp bench_out.json "bench/bench_r${ROUND}.json"
-  # Record the commit the snapshot measured, so a FUTURE gate can
-  # re-measure this exact code when its diff flags survive (self-witness
-  # above). HEAD is only honest when the MEASURED CODE is clean — scope
-  # the dirtiness check to code paths (the gate's own outputs —
-  # GATE_r*.txt, bench_out.json — are always mid-write here and must not
-  # poison the marker).
-  head_commit=$(git rev-parse HEAD)
-  [ -n "$(git status --porcelain -- src build.sbt project tools)" ] && \
-    head_commit="$head_commit-dirty"
-  echo "$head_commit" > "bench/bench_r${ROUND}.commit"
   echo "gate: archived full snapshot -> bench/bench_r${ROUND}.json ($(python3 -c \
-    "import json;print(len(json.load(open('bench_out.json'))['queries']))")q) @ $head_commit"
+    "import json;print(len(json.load(open('bench_out.json'))['queries']))")q)"
 fi
 echo "gate: PASS"
