@@ -940,25 +940,17 @@ object Dedup extends QueryModule {
   def dupSpanCut(spark: SparkSession, dir: String): DataFrame =
     dupSpanCut(docsTable(spark, dir))
 
-  /** Signature rows for the TEXT ingest gate — the dedup-gate family's
-    * on-storage state ([[graft.streaming.StreamingDedup]] delegates here;
-    * one rule, two consumers, the q212/q214 discipline): one
-    * `("h", sha256)` row per doc plus one `("band", key)` row per LSH
-    * band ([[bandRows]], the exact keys batch q79 uses), each carrying
-    * `src` = the LOWEST doc_id that first recorded the key (deterministic
-    * provenance owner — VERDICT r17 #3: a review queue consuming the gate
-    * asks "duplicate of WHAT", and a (kind, sig)-only table cannot
-    * answer) and `pb` = the key's probe bucket
-    * ([[graft.streaming.GateLoop.pbOf]]) so a micro-batch probe opens
-    * only its own keys' partitions (VERDICT r17 #2). */
-  def gateSignatureRows(docs: DataFrame): DataFrame =
-    gateSignatureData(docs)
-      .withColumn("pb", graft.streaming.GateLoop.pbOf(col("kind"), col("sig")))
-
-  /** [[gateSignatureRows]]'s DATA rows — everything but the `pb` probe
-    * bucket, which the typed [[graft.streaming.GateDescriptor]] path
-    * derives at the table's PINNED fan-out (a resized table hashes pb
-    * over more or fewer partitions than the default). */
+  /** Signature DATA rows for the TEXT ingest gate — the dedup-gate
+    * family's on-storage state ([[graft.streaming.StreamingDedup]]'s
+    * descriptor binds it; one rule, two consumers, the q212/q214
+    * discipline): one `("h", sha256)` row per doc plus one
+    * `("band", key)` row per LSH band ([[bandRows]], the exact keys
+    * batch q79 uses), each carrying `src` = the LOWEST doc_id that first
+    * recorded the key (deterministic provenance owner — VERDICT r17 #3:
+    * a review queue consuming the gate asks "duplicate of WHAT", and a
+    * (kind, sig)-only table cannot answer). The gate table adds the
+    * `pb` probe bucket at its pinned fan-out
+    * ([[graft.streaming.GateDescriptor.signatureRows]]). */
   def gateSignatureData(docs: DataFrame): DataFrame =
     docs.select(lit("h").as("kind"), sha2(col("text"), 256).as("sig"),
         col("doc_id").as("src"))
@@ -1011,12 +1003,12 @@ object Dedup extends QueryModule {
     * the oracle-checked batch twin of [[graft.streaming.StreamingDedup]]'s
     * delivery frame): docs with doc_id ≥ 400 classify against the
     * doc_id < 400 seed via [[gateClassifyProvenance]] over
-    * [[gateSignatureRows]] — exactly one streaming micro-batch against
+    * [[gateSignatureData]] — exactly one streaming micro-batch against
     * its seed, so the oracle pins the same rule the stream runs. */
   def dedupGateProvenance(spark: SparkSession, dir: String): DataFrame = {
     val docs = docsTable(spark, dir)
     gateClassifyProvenance(docs.filter(col("doc_id") >= 400),
-      gateSignatureRows(docs.filter(col("doc_id") < 400)))
+      gateSignatureData(docs.filter(col("doc_id") < 400)))
       .orderBy(col("doc_id"))
   }
 
@@ -1037,7 +1029,7 @@ object Dedup extends QueryModule {
     // no pin needed since reviewSummary went single-pass (opt r20): the
     // whole readout is one aggregation chain over one classify evaluation
     val frame = gateClassifyProvenance(docs.filter(col("doc_id") >= 400),
-      gateSignatureRows(docs.filter(col("doc_id") < 400)))
+      gateSignatureData(docs.filter(col("doc_id") < 400)))
     graft.streaming.GateDeliveries.reviewSummary(frame)
       .orderBy(col("status"))
   }
@@ -1089,7 +1081,7 @@ object Dedup extends QueryModule {
     * curated corpus the pipeline's downstream trains on. */
   private def acceptedDocs(docs: DataFrame): DataFrame = {
     val frame = gateClassifyProvenance(docs.filter(col("doc_id") >= 400),
-      gateSignatureRows(docs.filter(col("doc_id") < 400)))
+      gateSignatureData(docs.filter(col("doc_id") < 400)))
     docs.filter(col("doc_id") >= 400)
       .join(frame.filter(col("status") === "new").select("doc_id"),
         Seq("doc_id"), "left_semi")

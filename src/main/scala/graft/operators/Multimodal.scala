@@ -137,24 +137,17 @@ object Multimodal extends QueryModule {
     byteSimhashPairs(Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text").cast("binary").as("payload")))
 
-  /** Signature rows for a blob batch — the multimodal ingest gate's
-    * on-storage state ([[graft.streaming.StreamingMultimodalGate]]
-    * delegates here; one rule, two consumers): one `("h", md5_hex, null)`
-    * row per payload and one `("sh", band, sketch)` row per sketchable
-    * payload (≥ 8 bytes — shorter blobs still exact-dedup by md5 but have
-    * no near check, q208's own filter). Each row carries `src` = the
-    * lowest doc_id that first recorded the key (the provenance owner,
-    * VERDICT r17 #3) and `pb` = [[graft.streaming.GateLoop.pbOf]] of the
-    * (kind, sig) join key so micro-batch probes partition-prune
-    * (VERDICT r17 #2 — pb deliberately EXCLUDES the sketch: the near
-    * probe joins on the band alone). */
-  def gateSignatureRows(blobs: DataFrame): DataFrame =
-    gateSignatureData(blobs)
-      .withColumn("pb", graft.streaming.GateLoop.pbOf(col("kind"), col("sig")))
-
-  /** [[gateSignatureRows]]'s DATA rows — everything but the `pb` probe
-    * bucket, which the typed [[graft.streaming.GateDescriptor]] path
-    * derives at the table's PINNED fan-out. */
+  /** Signature DATA rows for a blob batch — the multimodal ingest
+    * gate's on-storage state ([[graft.streaming.StreamingMultimodalGate]]'s
+    * descriptor binds it; one rule, two consumers): one
+    * `("h", md5_hex, null)` row per payload and one `("sh", band, sketch)`
+    * row per sketchable payload (≥ 8 bytes — shorter blobs still
+    * exact-dedup by md5 but have no near check, q208's own filter). Each
+    * row carries `src` = the lowest doc_id that first recorded the key
+    * (the provenance owner, VERDICT r17 #3). The gate table adds the `pb`
+    * probe bucket over (kind, sig) at its pinned fan-out (VERDICT r17 #2
+    * — pb deliberately EXCLUDES the sketch: the near probe joins on the
+    * band alone). */
   def gateSignatureData(blobs: DataFrame): DataFrame = {
     val sk = byteSimhashSketch(blobs)
       .select(lit("sh").as("kind"),
@@ -224,7 +217,7 @@ object Multimodal extends QueryModule {
     val blobs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
     gateClassify(blobs.filter(col("doc_id") >= 400),
-      gateSignatureRows(blobs.filter(col("doc_id") < 400)))
+      gateSignatureData(blobs.filter(col("doc_id") < 400)))
       .select(col("doc_id"), col("status")) // q212 is the status readout;
       .orderBy(col("doc_id"))               // provenance is q214's surface
   }

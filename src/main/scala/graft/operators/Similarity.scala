@@ -1129,7 +1129,7 @@ object Similarity extends QueryModule {
     val docs = Tables(spark, dir, "documents")
     val text = Dedup.gateClassifyProvenance(
       docs.filter(col("doc_id") >= 400),
-      Dedup.gateSignatureRows(docs.filter(col("doc_id") < 400)))
+      Dedup.gateSignatureData(docs.filter(col("doc_id") < 400)))
     val emb2 = plantedEmbTable(spark, dir)
     val vec = StreamingEmbeddingGate.classify(
       emb2.filter(col("vec_id") >= 400),
@@ -1165,7 +1165,7 @@ object Similarity extends QueryModule {
     * q222's rule was oracle-checked over the TEXT chain only): batch 0 =
     * ids [400, 475) composed across BOTH surfaces against the < 400
     * seeds; the batch's JOINT accepts (joint_status = `new` — the rule
-    * [[graft.streaming.StreamingJointGate.processBatch]] appends by)
+    * [[graft.streaming.JointTables.processBatch]] appends by)
     * extend BOTH signature sides; batch 1 = ids ≥ 475 against the
     * extended pair. Joint-accept threading is the pair's defining
     * difference from two independent per-surface chains: a doc text

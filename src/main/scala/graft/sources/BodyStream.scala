@@ -265,6 +265,11 @@ class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int, checkpointLocat
 
   override def prepareForTriggerAvailableNow(): Unit = pinAvailableNow = true
 
+  /** Whether this instance has made sure its reader has a floor: the
+    * first admission publishes the start offset when no floor exists
+    * (`"hwm":""` = nothing archivable), once per stream instance. */
+  @volatile private var floorChecked = false
+
   override def initialOffset(): Offset = BodySeqOffset(0L, "")
   override def deserializeOffset(json: String): Offset = BodySeqOffset.parse(json)
 
@@ -293,6 +298,13 @@ class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int, checkpointLocat
       .fold(Vector.empty[String])(fence => BodyStream.list(dir).takeWhile(_ <= fence))
     cachedListing = listing
     val s = start.asInstanceOf[BodySeqOffset]
+    if (!floorChecked) {
+      // a reader's floor otherwise first appears at commit, which Spark
+      // calls only when a LATER batch starts: until then an archiver
+      // taking the lowest floor cannot see this reader at all
+      floorChecked = true
+      if (!Files.exists(Paths.get(dir, floorName))) publishFloor(s)
+    }
     val startIdx = BodyStream.boundaryIndex(listing, s, dir)
     // archival floor observed NOW: of the s.seq admitted bodies, startIdx
     // are still listed (all ≤ hwm), so seq − startIdx were archived
@@ -354,7 +366,8 @@ class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int, checkpointLocat
 
   /** Publishes this reader's retention floor: atomically (re)writes its
     * own `_archive_floor-<id>` file ([[BodyStream.floorName]]) in the body
-    * directory with the committed offset's JSON. Every reader of the
+    * directory with the committed offset's JSON (a reader's first floor
+    * is its start offset, published at first admission). Every reader of the
     * directory (the relay and an analytics twin, say) publishes one, so an
     * external archiver takes the MINIMUM `hwm` over all `_archive_floor-*`
     * files and may move to cold storage the files sorting at or below it,
@@ -371,20 +384,22 @@ class BodyMicroBatchStream(dir: String, maxFilesPerTrigger: Int, checkpointLocat
     * violations trip the boundary check loudly. */
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[BodySeqOffset]
-    if (e.hwm.nonEmpty) {
-      // sweep temp files a crashed prior commit of THIS reader left behind
-      // (dot-prefixed, so list() hides them and nothing else cleans them);
-      // another reader's temp file may be in flight, so leave it alone
-      val tmpPrefix = s".$floorName-"
-      graft.Tfs.local.list(dir)
-        .filter(e => e.name.startsWith(tmpPrefix) && e.name.endsWith(".tmp"))
-        .foreach(e => Files.deleteIfExists(Paths.get(e.path)))
-      val tmp = Files.createTempFile(Paths.get(dir), tmpPrefix, ".tmp")
-      Files.write(tmp, e.json().getBytes("UTF-8"))
-      Files.move(tmp, Paths.get(dir, floorName),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
+    if (e.hwm.nonEmpty) publishFloor(e)
+  }
+
+  private def publishFloor(o: BodySeqOffset): Unit = {
+    // sweep temp files a crashed prior commit of THIS reader left behind
+    // (dot-prefixed, so list() hides them and nothing else cleans them);
+    // another reader's temp file may be in flight, so leave it alone
+    val tmpPrefix = s".$floorName-"
+    graft.Tfs.local.list(dir)
+      .filter(e => e.name.startsWith(tmpPrefix) && e.name.endsWith(".tmp"))
+      .foreach(e => Files.deleteIfExists(Paths.get(e.path)))
+    val tmp = Files.createTempFile(Paths.get(dir), tmpPrefix, ".tmp")
+    Files.write(tmp, o.json().getBytes("UTF-8"))
+    Files.move(tmp, Paths.get(dir, floorName),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
   override def stop(): Unit = ()
 }

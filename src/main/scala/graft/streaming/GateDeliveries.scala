@@ -24,7 +24,7 @@ object GateDeliveries {
 
   /** A `deliver` callback writing each batch's frame into the
     * review-queue table at `deliveryDir` — pass to `GateTable.start` /
-    * `GateLoop.start`. `statusCol` names the partition column for
+    * `JointTables.start`. `statusCol` names the partition column for
     * frames whose status lives elsewhere (the joint gate's
     * `joint_status`). */
   def sink(deliveryDir: String,

@@ -2,21 +2,19 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The typed identity of ONE ingest gate (SURVEY §7.9 r19 #1): its
   * signature DATA schema, batch key column, the signature columns the
   * probe-bucket hash covers, the signature-row derivation and the
   * classify rule — bundled so a signature table can only ever be read,
   * probed, compacted or resized with the SAME contract that wrote it.
-  * Before this, the three gates' schema strings, key columns and pb
-  * formulas traveled separately through [[GateLoop]] /
-  * [[SignatureCompaction]] call sites; a reader passing gate A's schema
-  * to gate B's table failed only at runtime (or worse, read garbage
-  * columns as null). The three shipped descriptors live on their gates:
+  * The three shipped descriptors live on their gates:
   * [[StreamingDedup.descriptor]] (text), [[StreamingMultimodalGate
   * .descriptor]] (opaque bytes), [[StreamingEmbeddingGate.descriptor]]
-  * (vectors).
+  * (vectors). A caller tuning a gate's verify threshold binds a copy,
+  * e.g. `StreamingEmbeddingGate.descriptor.copy(classify =
+  * StreamingEmbeddingGate.classify(_, _, 0.99))`.
   *
   * `pbKeyCols` names the SIGNATURE columns hashed into `pb` — the one
   * fact bucket-count evolution needs: [[SignatureCompaction]]'s resize
@@ -33,7 +31,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * @param payloadCols the batch PAYLOAD columns `dataRows`/`classify`
   *                    consume besides `keyCol` (`text`, `embedding`,
   *                    `payload`) — what a multi-surface composer
-  *                    ([[StreamingJointGate]]) needs to carve each
+  *                    ([[JointTables]]) needs to carve each
   *                    surface's slice out of one shared item frame
   * @param dataRows    batch → signature DATA rows (everything but `pb`)
   * @param classify    (batch, signature snapshot) → the gate family's
@@ -55,7 +53,7 @@ final case class GateDescriptor(
     items.select(col(itemKey).as(keyCol) +: payloadCols.map(col): _*)
 
   /** Signature rows at a table's pinned fan-out: the data rows plus
-    * `pb` — THE one writer-side pb derivation for the typed path. */
+    * `pb` — THE one writer-side pb derivation. */
   def signatureRows(batch: DataFrame, buckets: Int): DataFrame =
     dataRows(batch).withColumn("pb",
       GateLoop.pbOf(buckets, pbKeyCols.map(col)))
@@ -68,10 +66,9 @@ final case class GateDescriptor(
   * is unrepresentable rather than a runtime surprise. The table's
   * probe-bucket fan-out is pinned at [[seed]] time in the
   * [[GateLoop.BucketsMeta]] marker and honored everywhere — a gate
-  * resumed after a [[SignatureCompaction]] resize derives probes and
-  * new signatures at the RESIZED count automatically, which the
-  * string-typed [[GateLoop.processBatch]] path cannot (it guards and
-  * refuses instead). */
+  * resumed after a [[resize]] derives probes and new signatures at the
+  * RESIZED count automatically. A table without the marker (written
+  * before it existed) reads at [[GateLoop.NumBuckets]]. */
 final case class GateTable(desc: GateDescriptor, sigDir: String) {
 
   /** The table's pinned probe-bucket fan-out. */
@@ -137,33 +134,31 @@ final case class GateTable(desc: GateDescriptor, sigDir: String) {
 
   /** One micro-batch under [[GateLoop]]'s discipline (replay-safe
     * exactly-once signature append, probe-bucket pruned snapshot),
-    * with pb derived at the table's pinned fan-out. */
+    * with pb derived at the table's pinned fan-out. Exposed so the
+    * replay and pruning contracts are directly unit-testable. */
   def processBatch(batch: DataFrame, batchId: Long,
-                   deliver: (DataFrame, Long) => Unit): Unit =
-    GateLoop.runBatch(batch, batchId, sigDir, desc.sigSchema, desc.keyCol,
-      desc.classify, desc.signatureRows(_, buckets), deliver)
+                   deliver: (DataFrame, Long) => Unit): Unit = {
+    val b = buckets
+    val sigs = GateLoop.guardedSnapshot(this, batch, batchId, b)
+    val classified = desc.classify(batch, sigs).localCheckpoint(true)
+    val accepted = batch.join(
+      classified.filter(col("status") === "new").select(col(desc.keyCol)),
+      Seq(desc.keyCol), "left_semi")
+    GateLoop.appendSignatures(this, accepted, batchId, b)
+    deliver(classified, batchId)
+  }
 
-  /** Start the continuous gate (see [[GateLoop.start]]; this typed
-    * variant re-reads the pinned fan-out each micro-batch, so a gate
-    * RESTARTED after an offline [[resize]] picks the new count up
-    * automatically — but the resize itself requires the query STOPPED,
+  /** Start the continuous gate: [[processBatch]] per micro-batch. It
+    * re-reads the pinned fan-out each micro-batch, so a gate RESTARTED
+    * after an offline [[resize]] picks the new count up automatically —
+    * but the resize itself requires the query STOPPED,
     * [[SignatureCompaction]]'s single-writer contract: a trigger firing
-    * mid-swap would read a half-moved table). */
+    * mid-swap would read a half-moved table. `deliver` receives each
+    * batch's provenance frame, at-least-once. */
   def start(stream: DataFrame, deliver: (DataFrame, Long) => Unit,
             checkpointDir: Option[String] = None,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    require(stream.isStreaming,
-      "stream must be a streaming DataFrame; use classifyNow for batch")
-    val w: DataStreamWriter[org.apache.spark.sql.Row] =
-      stream.writeStream.outputMode("append")
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, deliver)
-        }
-    checkpointDir.foreach(d => w.option("checkpointLocation", d))
-    StreamSession.prepare(stream.sparkSession)
-    w.start()
-  }
+            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
+    GateLoop.launch(stream, checkpointDir, trigger)(processBatch(_, _, deliver))
 
   /** [[SignatureCompaction.compact]] with this table's contract. */
   def compact(spark: SparkSession,

@@ -3,13 +3,15 @@ package graft.streaming
 import graft.Tfs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** THE signature-gate micro-batch discipline, in one place — the three
+/** THE signature-gate micro-batch discipline, in one place. The three
   * ingest gates ([[StreamingDedup]] text, [[StreamingMultimodalGate]]
   * opaque bytes, [[StreamingEmbeddingGate]] vectors) differ only in
-  * their signature schema, signature derivation, and classify rule;
-  * the tricky parts are identical and live here once:
+  * their [[GateDescriptor]]: signature schema, signature derivation and
+  * classify rule. Every gate runs through a [[GateTable]] (one table)
+  * or [[JointTables]] (the joint gate's pair), both of which apply the
+  * halves below per table; the tricky parts live here once:
   *
   *   - the classification snapshot EXCLUDES the current batch's own
   *     `batch=<batchId>` partition (r17 review catch): foreachBatch is
@@ -21,29 +23,30 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   *     original statuses, and rewrites the identical partition —
   *     exactly-once state under at-least-once execution;
   *   - the snapshot is PROBE-BUCKET PRUNED (VERDICT r17 #2): signature
-  *     rows carry `pb` = [[pbOf]] of their join key and land
-  *     hive-partitioned `batch=<id>/pb=<b>/`, so each micro-batch reads
-  *     only the ≤[[NumBuckets]] partitions its own probe keys hash to —
-  *     the seed can be petabytes; a batch opens its buckets. Pruning is
-  *     sound because every probe is an EQUI-join on the key `pb` hashes:
-  *     a matching row necessarily lives in a probed bucket;
+  *     rows carry `pb` = [[pbOf]] of their join key at the table's
+  *     pinned fan-out and land hive-partitioned `batch=<id>/pb=<b>/`, so
+  *     each micro-batch reads only the partitions its own probe keys
+  *     hash to — the seed can be petabytes; a batch opens its buckets.
+  *     Pruning is sound because every probe is an EQUI-join on the key
+  *     `pb` hashes: a matching row necessarily lives in a probed bucket;
   *   - statuses are fixed (eager localCheckpoint) BEFORE the signature
-  *     append lands, so the two consumers below never recompute;
+  *     append lands, so the two consumers (append, deliver) never
+  *     recompute;
   *   - accepted (`new`) rows' signatures overwrite `batch=<batchId>`;
   *   - a FRESH CHECKPOINT against an existing signature table is
   *     rejected (ADVICE r17): batchIds would restart at 0 and each
   *     batch N would exclude-then-overwrite the HISTORICAL batch=N
   *     partition, silently erasing prior signatures. `sigDir` and
   *     `checkpointDir` must stay paired; to re-attach a fresh
-  *     checkpoint, run [[SignatureCompaction.compact]] first (folding
-  *     history into `batch=-1`, which is never excluded or overwritten).
+  *     checkpoint, run [[GateTable.compact]] first (folding history
+  *     into `batch=-1`, which is never excluded or overwritten).
   *
   * Deliveries carry the gate family's shared PROVENANCE frame
   * (VERDICT r17 #3): `(key, status, matched_seed, score)` — the review
   * queue learns "duplicate of WHAT" without a batch re-join. `deliver`
   * remains at-least-once; the signature table is exactly-once.
   *
-  * [[SignatureCompaction.compact]]'s single-writer contract composes:
+  * [[SignatureCompaction]]'s single-writer contract composes:
   * compaction requires a CLEANLY-STOPPED gate (no uncommitted batch),
   * so no replay can ever see its own rows folded into `batch=-1`. */
 object GateLoop {
@@ -51,7 +54,7 @@ object GateLoop {
   /** DEFAULT probe-bucket fan-out of a gate's signature table. A table's
     * ACTUAL fan-out is pinned at seed time and recorded in its
     * [[BucketsMeta]] marker; it evolves only through
-    * [[SignatureCompaction.compact]]'s `targetBuckets` rewrite (a live
+    * [[GateTable.resize]]'s `targetBuckets` rewrite (a live
     * resize would split every key's rows across two layouts and silently
     * un-prune matches). Bounded so the per-batch pruning set collects at
     * most this many ints onto the driver. */
@@ -67,9 +70,6 @@ object GateLoop {
     * loses matches. */
   def pbOf(buckets: Int, keyCols: Seq[Column]): Column =
     pmod(xxhash64(keyCols: _*), lit(buckets)).cast("int")
-
-  /** [[pbOf]] at the default fan-out (the pre-resize gate surface). */
-  def pbOf(keyCols: Column*): Column = pbOf(NumBuckets, keyCols)
 
   /** The table's pinned bucket count ([[BucketsMeta]]; [[NumBuckets]]
     * when the marker is absent — every pre-marker table was written at
@@ -114,58 +114,13 @@ object GateLoop {
       .drop("batch", "pb")
   }
 
-  /** One micro-batch. Exposed (not just the lambda) so the replay and
-    * pruning contracts are directly unit-testable. `sigSchema` is the
-    * DATA schema; the `batch`/`pb` partition columns are appended for
-    * the exclusion/pruning filters and dropped before `classify` sees
-    * the snapshot. `signatureRows` must emit the data columns plus
-    * `pb` ([[pbOf]] of the row's join key) — at the DEFAULT fan-out:
-    * this string-typed entry predates bucket evolution, so it guards
-    * against a resized table (whose pb layout its fixed-[[NumBuckets]]
-    * closure would mis-hash); gates on a resized table go through
-    * [[GateTable]], whose descriptor derives pb at the table's pinned
-    * count. */
-  def processBatch(batch: DataFrame, batchId: Long, sigDir: String,
-                   sigSchema: String, keyCol: String,
-                   classify: (DataFrame, DataFrame) => DataFrame,
-                   signatureRows: DataFrame => DataFrame,
-                   deliver: (DataFrame, Long) => Unit): Unit = {
-    val buckets = readBuckets(sigDir)
-    require(buckets == NumBuckets,
-      s"$sigDir is pinned at $buckets probe buckets but this entry point " +
-        s"derives pb at the default $NumBuckets — use the GateTable API " +
-        "(whose descriptor recomputes pb at the table's pinned count) " +
-        "for tables resized by SignatureCompaction.")
-    runBatch(batch, batchId, sigDir, sigSchema, keyCol,
-      classify, signatureRows, deliver)
-  }
-
-  /** The micro-batch discipline proper — `signatureRows` is already
-    * bound to the table's pinned bucket count by the caller (the legacy
-    * [[processBatch]] guard above, or [[GateTable.processBatch]]'s
-    * descriptor binding). */
-  private[streaming] def runBatch(batch: DataFrame, batchId: Long,
-                   sigDir: String, sigSchema: String, keyCol: String,
-                   classify: (DataFrame, DataFrame) => DataFrame,
-                   signatureRows: DataFrame => DataFrame,
-                   deliver: (DataFrame, Long) => Unit): Unit = {
-    val sigs = guardedSnapshot(batch, batchId, sigDir, sigSchema, signatureRows)
-    val classified = classify(batch, sigs).localCheckpoint(true)
-    val accepted = batch.join(
-      classified.filter(col("status") === "new").select(col(keyCol)),
-      Seq(keyCol), "left_semi")
-    appendSignatures(accepted, batchId, sigDir, signatureRows)
-    deliver(classified, batchId)
-  }
-
   /** The read half of one micro-batch against one table: the fresh-
-    * checkpoint guard + the replay-excluded, probe-pruned snapshot.
-    * Factored out so composite gates (the joint gate probing TWO
-    * tables in one batch) reuse the exact discipline per table. */
-  private[streaming] def guardedSnapshot(batch: DataFrame, batchId: Long,
-                   sigDir: String, sigSchema: String,
-                   signatureRows: DataFrame => DataFrame): DataFrame = {
-    val entries = Tfs.of(sigDir).list(sigDir).map(_.name)
+    * checkpoint guard + the replay-excluded snapshot, pruned to the
+    * buckets `batch`'s probe keys hash to at `buckets` (the table's
+    * pinned fan-out, read once per batch by the caller). */
+  private[streaming] def guardedSnapshot(t: GateTable, batch: DataFrame,
+                                         batchId: Long, buckets: Int): DataFrame = {
+    val entries = Tfs.of(t.sigDir).list(t.sigDir).map(_.name)
     // mid-swap guard (the resize scaladoc's "re-run before restarting
     // the gate" remediation ENFORCED): a pending `.graft-sig-compact-*`
     // work dir means a compact/resize crashed mid-swap (or is running
@@ -175,8 +130,8 @@ object GateLoop {
     // refuse until the swap completes.
     val pending = entries.filter(_.startsWith(".graft-sig-compact-"))
     require(pending.isEmpty,
-      s"$sigDir holds an unfinished compaction/resize swap " +
-        s"(${pending.mkString(", ")}): re-run SignatureCompaction.compact " +
+      s"${t.sigDir} holds an unfinished compaction/resize swap " +
+        s"(${pending.mkString(", ")}): re-run GateTable.compact " +
         "or .resize to finish the swap (its startup sweep clears the " +
         "pending work dir) before running the gate.")
     val maxBatch = entries
@@ -185,39 +140,33 @@ object GateLoop {
       .maxOption.getOrElse(-1L)
     require(batchId >= maxBatch,
       s"batch $batchId arrived below the table's max batch $maxBatch: " +
-        s"$sigDir was written by a LATER checkpoint — a fresh checkpoint " +
+        s"${t.sigDir} was written by a LATER checkpoint — a fresh checkpoint " +
         "would exclude-then-overwrite historical partitions and erase " +
         "their signatures. Keep sigDir and checkpointDir paired, or run " +
-        "SignatureCompaction.compact before attaching a new checkpoint.")
-    val probePbs = signatureRows(batch).select(col("pb"))
+        "GateTable.compact before attaching a new checkpoint.")
+    val probePbs = t.desc.signatureRows(batch, buckets).select(col("pb"))
       .distinct().collect().map(_.getInt(0)).toSeq // bounded by the fan-out
-    snapshot(batch.sparkSession, sigDir, sigSchema, batchId, probePbs)
+    snapshot(batch.sparkSession, t.sigDir, t.desc.sigSchema, batchId, probePbs)
   }
 
   /** The write half: the accepted rows' signatures overwrite the
     * batch's own partition — exactly-once under at-least-once replay. */
-  private[streaming] def appendSignatures(accepted: DataFrame, batchId: Long,
-                   sigDir: String,
-                   signatureRows: DataFrame => DataFrame): Unit =
-    signatureRows(accepted).write.mode("overwrite")
-      .partitionBy("pb").parquet(s"$sigDir/batch=$batchId")
+  private[streaming] def appendSignatures(t: GateTable, accepted: DataFrame,
+                                          batchId: Long, buckets: Int): Unit =
+    t.desc.signatureRows(accepted, buckets).write.mode("overwrite")
+      .partitionBy("pb").parquet(s"${t.sigDir}/batch=$batchId")
 
-  def start(stream: DataFrame, sigDir: String,
-            sigSchema: String, keyCol: String,
-            classify: (DataFrame, DataFrame) => DataFrame,
-            signatureRows: DataFrame => DataFrame,
-            deliver: (DataFrame, Long) => Unit,
-            checkpointDir: Option[String],
-            trigger: Trigger): StreamingQuery = {
+  /** Start a gate's continuous loop: `body` runs once per micro-batch
+    * under `foreachBatch`, checkpointed at `checkpointDir`, on a session
+    * prepared by [[StreamSession.prepare]]. Shared by [[GateTable.start]]
+    * and [[JointTables.start]]. */
+  private[streaming] def launch(stream: DataFrame, checkpointDir: Option[String],
+                                trigger: Trigger)(
+                                body: (DataFrame, Long) => Unit): StreamingQuery = {
     require(stream.isStreaming,
-      "stream must be a streaming DataFrame; use the gate's classify() for batch")
-    val w: DataStreamWriter[org.apache.spark.sql.Row] =
-      stream.writeStream.outputMode("append")
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, sigDir, sigSchema, keyCol,
-            classify, signatureRows, deliver)
-        }
+      "stream must be a streaming DataFrame; run processBatch on a static one")
+    val w = stream.writeStream.outputMode("append").trigger(trigger)
+      .foreachBatch(body)
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
     StreamSession.prepare(stream.sparkSession)
     w.start()

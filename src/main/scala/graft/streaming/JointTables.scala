@@ -1,10 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The [[StreamingJointGate]]'s table PAIR as ONE maintenance unit
-  * (SURVEY §7.9 third-refresh candidate #1): the joint gate appends the
+/** The [[StreamingJointGate]]'s table PAIR: the joint gate's loop
+  * ([[processBatch]], [[start]]) and ONE maintenance unit (SURVEY §7.9
+  * third-refresh candidate #1). The joint gate appends the
   * SAME `batch=<id>` to both tables, so the pair's invariant is
   * batch-set alignment — and every pair-level maintenance operation
   * (compact / history fold / resize / re-seed) must run inside one
@@ -126,19 +128,47 @@ final case class JointTables(text: GateTable, vec: GateTable) {
       vec.resize(spark, vecBuckets, targetFileBytes))
   }
 
-  /** One joint micro-batch — [[StreamingJointGate.processBatch]] on the
-    * pair. */
+  /** One micro-batch of multi-surface items (the joint gate,
+    * [[StreamingJointGate]]): `itemKey` names the batch's shared id
+    * column, and each surface's slice (id renamed to that gate's
+    * `keyCol`, plus its declared `payloadCols`) is carved by
+    * [[GateDescriptor.sliceOf]] — the descriptor, not this composer,
+    * says which columns its rules consume. Each table gets
+    * [[GateLoop]]'s guarded snapshot at its own pinned fan-out; only
+    * items whose composed `joint_status` is `new` append signatures,
+    * to both tables. Exposed for direct unit testing, like
+    * [[GateTable.processBatch]]. */
   def processBatch(batch: DataFrame, batchId: Long,
                    deliver: (DataFrame, Long) => Unit,
-                   itemKey: String = "doc_id"): Unit =
-    StreamingJointGate.processBatch(batch, batchId, text, vec, deliver, itemKey)
+                   itemKey: String = "doc_id"): Unit = {
+    val (textB, vecB) = (text.buckets, vec.buckets)
+    val docs = text.desc.sliceOf(batch, itemKey)
+    val vecs = vec.desc.sliceOf(batch, itemKey)
+    val textSigs = GateLoop.guardedSnapshot(text, docs, batchId, textB)
+    val vecSigs = GateLoop.guardedSnapshot(vec, vecs, batchId, vecB)
+    val joint = StreamingJointGate.compose(text.desc.classify(docs, textSigs),
+      vec.desc.classify(vecs, vecSigs),
+      text.desc.keyCol, vec.desc.keyCol, itemKey).localCheckpoint(true)
+    val acceptedIds = joint.filter(col("joint_status") === "new")
+      .select(itemKey)
+    def accepted(t: GateTable, slice: DataFrame): DataFrame =
+      slice.join(acceptedIds.select(col(itemKey).as(t.desc.keyCol)),
+        Seq(t.desc.keyCol), "left_semi")
+    GateLoop.appendSignatures(text, accepted(text, docs), batchId, textB)
+    GateLoop.appendSignatures(vec, accepted(vec, vecs), batchId, vecB)
+    deliver(joint, batchId)
+  }
 
-  /** The continuous joint gate on the pair —
-    * [[StreamingJointGate.start]]. */
+  /** Start the continuous joint gate: [[processBatch]] per micro-batch.
+    * `deliver` receives each batch's composed frame `(doc_id,
+    * text_status, emb_status, joint_status)` (at-least-once; both
+    * signature tables exactly-once) — `GateDeliveries.sink(dir,
+    * statusCol = "joint_status")` lands it in a review queue partitioned
+    * by the composed status. */
   def start(items: DataFrame, deliver: (DataFrame, Long) => Unit,
             checkpointDir: Option[String] = None,
             trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
             itemKey: String = "doc_id"): StreamingQuery =
-    StreamingJointGate.start(items, text, vec, deliver, checkpointDir,
-      trigger, itemKey)
+    GateLoop.launch(items, checkpointDir, trigger)(
+      processBatch(_, _, deliver, itemKey))
 }

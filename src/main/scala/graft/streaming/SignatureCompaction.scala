@@ -47,7 +47,11 @@ import org.apache.spark.sql.types.StructType
   * maintenance against Hadoop `FileSystem` — the object-store story a
   * 100 TB signature table needs. The seam's move contract (atomic
   * destination visibility, crash tolerance via unique names +
-  * idempotent re-run) is documented at [[graft.Tfs]]. */
+  * idempotent re-run) is documented at [[graft.Tfs]].
+  *
+  * Callers go through [[GateTable.compact]], [[GateTable.resize]] and
+  * [[GateTable.foldHistory]] (or [[JointTables]] for a pair), which bind
+  * the table's own schema and fan-out. */
 object SignatureCompaction {
 
   /** Fold every `batch=<id>` partition into the distinct `batch=-1`
@@ -56,8 +60,9 @@ object SignatureCompaction {
     * size. @return number of batch partitions folded away (0 = nothing
     * to fold: the idempotence witness; a seed fragmented past one file
     * per bucket is still rewritten). */
-  def compact(spark: SparkSession, sigDir: String, schema: String,
-              targetFileBytes: Long = 128L << 20): Int = {
+  private[streaming] def compact(spark: SparkSession, sigDir: String,
+                                schema: String,
+                                targetFileBytes: Long = 128L << 20): Int = {
     val fs = Tfs.of(sigDir)
     fs.dirsWithPrefix(sigDir, ".graft-sig-compact-").foreach(fs.rmTree)
     val batchDirs = fs.dirsWithPrefix(sigDir, "batch=")
@@ -216,7 +221,8 @@ object SignatureCompaction {
     * batch id is -1, re-admitting a fresh checkpoint ([[GateLoop]]'s
     * guard). @return folded batch ids, ascending (empty = nothing to
     * fold: the idempotence witness). */
-  def foldHistory(spark: SparkSession, sigDir: String, keepLast: Int): Seq[Long] = {
+  private[streaming] def foldHistory(spark: SparkSession, sigDir: String,
+                                    keepLast: Int): Seq[Long] = {
     require(keepLast >= 0, s"keepLast must be >= 0, got $keepLast")
     foldBatchPartitions(spark, sigDir, keepLast, subPrefix = "pb=")
   }

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming incremental corpus dedup — q79's classifier promoted to a
   * first-class continuous entry point (the reference's own run-forever loop
@@ -50,8 +48,12 @@ object StreamingDedup {
   val SigSchema = "kind STRING, sig STRING, src BIGINT"
 
   /** The text gate's typed identity (SURVEY §7.9 r19 #1) — bind it to a
-    * directory with `GateTable(StreamingDedup.descriptor, sigDir)` for
-    * the misuse-proof surface (typed reads, resize-aware loop). */
+    * directory with `GateTable(StreamingDedup.descriptor, sigDir)`, then
+    * `seed` the corpus and `start` the loop. Signature rows
+    * ([[Dedup.gateSignatureData]]): one `("h", sha256)` row per doc plus
+    * one `("band", key)` row per LSH band, each with its first-seen
+    * owner `src`; one unified table keeps the exact and near checks in
+    * one scan/join. */
   val descriptor: GateDescriptor = GateDescriptor(
     name = "text",
     sigSchema = SigSchema,
@@ -60,39 +62,4 @@ object StreamingDedup {
     payloadCols = Seq("text"),
     dataRows = Dedup.gateSignatureData,
     classify = Dedup.gateClassifyProvenance)
-
-  /** Signature rows for a (static) doc batch — the batch rule verbatim
-    * ([[Dedup.gateSignatureRows]]): one `("h", sha256)` row per doc plus
-    * one `("band", key)` row per LSH band, each with its first-seen owner
-    * `src` and probe bucket `pb`. One unified table keeps the exact and
-    * near checks in one scan/join. */
-  def signatureRows(docs: DataFrame): DataFrame =
-    Dedup.gateSignatureRows(docs)
-
-  /** Materialize the corpus seed — the "existing corpus" the stream dedups
-    * against. Partition `batch=-1` so seed and per-batch appends share one
-    * partitioned table ([[GateLoop]]'s `pb` sub-partitioning included). */
-  def seedSignatures(corpus: DataFrame, sigDir: String): Unit =
-    signatureRows(corpus).write.mode("overwrite")
-      .partitionBy("pb").parquet(s"$sigDir/batch=-1")
-
-  /** Classify `newDocs` against a signature snapshot → the shared
-    * provenance frame `(doc_id, status, matched_seed, score)` — the
-    * oracle-checked batch rule verbatim ([[Dedup.gateClassifyProvenance]],
-    * q217). */
-  def classify(newDocs: DataFrame, sigs: DataFrame): DataFrame =
-    Dedup.gateClassifyProvenance(newDocs, sigs)
-
-  /** Start the continuous dedup ([[GateLoop]] — one copy of the replay-
-    * safe, probe-pruned micro-batch discipline for all three gates).
-    * `deliver` receives each batch's provenance frame — write it to a
-    * sink table, route accepted docs on, etc. (at-least-once; the
-    * signature table stays exactly-once via the loop's own-partition
-    * exclusion + overwrite). */
-  def start(docs: DataFrame, sigDir: String,
-            deliver: (DataFrame, Long) => Unit,
-            checkpointDir: Option[String] = None,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    GateLoop.start(docs, sigDir, SigSchema, "doc_id",
-      classify, signatureRows, deliver, checkpointDir, trigger)
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming embedding ingest gate — q216's continuous twin, completing
   * the gate family's streaming surface (text: [[StreamingDedup]], opaque
@@ -33,8 +32,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * with the array equality demoted to a collision verify inside the
   * aggregate. At 100 TB the emb column is the same width the corpus
   * already stores; the bucket column keeps the near probe an equi-join.
-  * [[SignatureCompaction.compact]] applies unchanged (`SigSchema`
-  * below). */
+  * [[GateTable.compact]] applies unchanged (`SigSchema` below). */
 object StreamingEmbeddingGate {
 
   /** Signature table DATA schema (the `pb`/`batch` partition columns are
@@ -44,9 +42,10 @@ object StreamingEmbeddingGate {
 
   /** The embedding gate's typed identity (SURVEY §7.9 r19 #1) — `pb`
     * hashes the HYPERPLANE bucket, sound for both probes because
-    * byte-identical vectors share it (see [[signatureRows]]). `classify`
-    * at the default τ; a caller tuning the verify threshold builds its
-    * own descriptor copy. */
+    * byte-identical vectors share it, so the exact probe's digest lookup
+    * always lands in the probed partitions too. `classify` at the
+    * default τ; a caller tuning the verify threshold binds its own
+    * `descriptor.copy(classify = classify(_, _, tau))`. */
   val descriptor: GateDescriptor = GateDescriptor(
     name = "embedding",
     sigSchema = SigSchema,
@@ -61,27 +60,14 @@ object StreamingEmbeddingGate {
       .select(col("vec_id"), Similarity.vecDigest(col("emb")).as("dig"),
         col("bucket").cast("long").as("bucket"), col("nrm"), col("emb"))
 
-  /** Signature rows for a (static) vector batch: one row per distinct
-    * vector, `src` = the lowest vec_id that first recorded it (the
-    * provenance owner), `pb` = the probe bucket of the HYPERPLANE bucket
-    * — sound for BOTH probes, because byte-identical vectors share the
-    * bucket, so the exact probe's digest lookup always lands in the
-    * probed partitions too. */
-  def signatureRows(vecs: DataFrame): DataFrame =
-    signatureData(vecs).withColumn("pb", GateLoop.pbOf(col("bucket")))
-
-  /** [[signatureRows]]'s DATA rows — everything but `pb`, which the
-    * typed [[GateDescriptor]] path derives at the table's pinned
-    * fan-out. */
+  /** Signature DATA rows for a (static) vector batch: one row per
+    * distinct vector, `src` = the lowest vec_id that first recorded it
+    * (the provenance owner). [[GateDescriptor.signatureRows]] adds `pb`
+    * over the HYPERPLANE bucket at the table's pinned fan-out. */
   def signatureData(vecs: DataFrame): DataFrame =
     sketch(vecs)
       .groupBy(col("dig"), col("bucket"), col("nrm"), col("emb"))
       .agg(min(col("vec_id")).as("src"))
-
-  /** Materialize the corpus seed under `batch=-1`. */
-  def seedSignatures(corpus: DataFrame, sigDir: String): Unit =
-    signatureRows(corpus).write.mode("overwrite")
-      .partitionBy("pb").parquet(s"$sigDir/batch=-1")
 
   /** Classify `newVecs` against a signature snapshot → the shared
     * provenance frame `(vec_id, status, matched_seed, score)`.
@@ -121,16 +107,4 @@ object StreamingEmbeddingGate {
         when(col("exact_seed").isNotNull, lit(1.0))
           .otherwise(col("near_sim")).as("score"))
   }
-
-  /** Start the continuous gate ([[GateLoop]] — one copy of the replay-
-    * safe, probe-pruned micro-batch discipline; at-least-once `deliver`
-    * of the provenance frame, exactly-once signature table via
-    * own-partition exclusion + overwrite). */
-  def start(vecs: DataFrame, sigDir: String,
-            deliver: (DataFrame, Long) => Unit,
-            checkpointDir: Option[String] = None,
-            tau: Double = 0.999,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    GateLoop.start(vecs, sigDir, SigSchema, "vec_id",
-      classify(_, _, tau), signatureRows, deliver, checkpointDir, trigger)
 }

@@ -1,9 +1,6 @@
 package graft.streaming
 
 import graft.operators.Multimodal
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Streaming multimodal ingest gate — q208's continuous twin (VERDICT r16
   * #4): each micro-batch of opaque payloads (`doc_id BIGINT, payload
@@ -46,8 +43,8 @@ object StreamingMultimodalGate {
   /** The multimodal gate's typed identity (SURVEY §7.9 r19 #1) — the
     * probe bucket hashes (kind, sig) only, never the sketch: the near
     * probe joins on the band alone. `classify` at the default
-    * `maxHamming`; a caller tuning the verify threshold builds its own
-    * descriptor copy. */
+    * `maxHamming` of 12; a caller tuning the verify threshold binds its
+    * own `descriptor.copy(classify = Multimodal.gateClassify(_, _, h))`. */
   val descriptor: GateDescriptor = GateDescriptor(
     name = "multimodal",
     sigSchema = SigSchema,
@@ -56,38 +53,4 @@ object StreamingMultimodalGate {
     payloadCols = Seq("payload"),
     dataRows = Multimodal.gateSignatureData,
     classify = Multimodal.gateClassify(_, _, 12))
-
-  /** Signature rows for a (static) blob batch — the batch rule verbatim
-    * ([[Multimodal.gateSignatureRows]]; one rule, two consumers). */
-  def signatureRows(blobs: DataFrame): DataFrame =
-    Multimodal.gateSignatureRows(blobs)
-
-  /** Materialize the corpus seed under `batch=-1` (shares the partitioned
-    * table — `pb` sub-partitioning included — with per-batch appends). */
-  def seedSignatures(corpus: DataFrame, sigDir: String): Unit =
-    signatureRows(corpus).write.mode("overwrite")
-      .partitionBy("pb").parquet(s"$sigDir/batch=-1")
-
-  /** Classify `newBlobs` against a signature snapshot → the gate
-    * family's shared provenance frame `(doc_id, status, matched_seed,
-    * score)` — the batch rule verbatim ([[Multimodal.gateClassify]],
-    * whose status readout is the oracle-checked q212 and whose arg-min
-    * provenance is q214's): exact > near precedence, distinct-reduced
-    * joins driven by the (small) batch side; score = Hamming distance
-    * (0.0 for exact by definition). */
-  def classify(newBlobs: DataFrame, sigs: DataFrame,
-               maxHamming: Int = 12): DataFrame =
-    Multimodal.gateClassify(newBlobs, sigs, maxHamming)
-
-  /** Start the continuous gate ([[GateLoop]] — one copy of the replay-
-    * safe, probe-pruned micro-batch discipline). `deliver` receives each
-    * batch's provenance frame, at-least-once; the signature table stays
-    * exactly-once via the loop's own-partition exclusion + overwrite. */
-  def start(blobs: DataFrame, sigDir: String,
-            deliver: (DataFrame, Long) => Unit,
-            checkpointDir: Option[String] = None,
-            maxHamming: Int = 12,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    GateLoop.start(blobs, sigDir, SigSchema, "doc_id",
-      classify(_, _, maxHamming), signatureRows, deliver, checkpointDir, trigger)
 }

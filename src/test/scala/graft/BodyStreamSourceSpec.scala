@@ -168,7 +168,7 @@ class BodyStreamSourceSpec extends AnyFunSuite {
     val sink1 = new CollectingSink
     // maxFilesPerTrigger=1 forces ≥2 micro-batches: Spark invokes
     // source.commit(N) when batch N+1 starts, so a single-batch AvailableNow
-    // run terminates before any floor is published (the marker lags the
+    // run leaves only the start-offset floor (the marker lags the
     // checkpoint by one batch — conservative, safe for the archiver)
     val q1 = RelayPipeline.start(spark,
       RemoteWrite.bodyDsv2Stream(spark, dir, maxFilesPerTrigger = 1), sink1,
@@ -193,6 +193,29 @@ class BodyStreamSourceSpec extends AnyFunSuite {
     // exactly the new body — no replay attempt against archived files
     assert(sink2.allLines.size == 1)
     assert(sink2.allLines.head.contains(""""name":"fresh""""))
+  }
+
+  test("a new reader publishes its start offset as its floor: after a " +
+      "one-batch drain, archiving to the lowest floor removes nothing") {
+    import graft.sources.BodyStream
+    val dir = Files.createTempDirectory("graft-bodies-").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    writeBodies(dir, (1 to 4).map(i =>
+      body(TimeSeries(Map("__name__" -> s"m$i"), Seq(Sample(i.toDouble, i.toLong))))))
+    val sink = new CollectingSink
+    val q = RelayPipeline.start(spark, RemoteWrite.bodyDsv2Stream(spark, dir), sink,
+      trigger = Trigger.AvailableNow(), checkpointDir = Some(ckpt))
+    q.awaitTermination(60000)
+    assert(sink.allLines.size == 4)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1, "one micro-batch")
+    // no later batch ran, so Spark never called commit: the floor is the
+    // one published at first admission, and it covers nothing
+    val Seq(floor) = floors(dir)
+    assert(floor.seq == 0L && floor.hwm.isEmpty)
+    val before = BodyStream.list(dir)
+    before.takeWhile(_ <= floors(dir).map(_.hwm).min)
+      .foreach(n => Files.delete(Paths.get(dir, n)))
+    assert(BodyStream.list(dir) == before)
   }
 
   test("two readers of one directory: archiving to the lowest floor loses no body") {

@@ -71,7 +71,16 @@ class DegenerateInputSpec extends AnyFunSuite {
       "dupSpanCoverage" -> (() => operators.Dedup.dupSpanCoverage(spark, docsDir)),
       "dupSpanCut" -> (() => operators.Dedup.dupSpanCut(spark, docsDir)),
       "tokenPmi" -> (() => operators.TextStats.tokenPmi(
-        spark.read.parquet(s"$docsDir/documents.parquet"))))
+        spark.read.parquet(s"$docsDir/documents.parquet"))),
+      // the text gate's batch twins: every fixture doc is in the < 400
+      // seed, so each incoming batch is empty
+      "q217" -> (() => operators.Dedup.dedupGateProvenance(spark, docsDir)),
+      "q218" -> (() => operators.Dedup.gateReviewQueue(spark, docsDir)),
+      "q219" -> (() => operators.Dedup.gateBatchChain(spark, docsDir)),
+      "q222" -> (() => operators.Dedup.gateHealth(spark, docsDir)),
+      "q224" -> (() => operators.Dedup.gateMixDrift(spark, docsDir)),
+      "q225" -> (() => operators.Dedup.gateMixAnomaly(spark, docsDir)),
+      "q226" -> (() => operators.Dedup.gateSeedDrilldown(spark, docsDir)))
     probes.foreach { case (name, f) =>
       withClue(s"$name on degenerate docs: ") { evaluates(f()) }
     }
@@ -82,6 +91,8 @@ class DegenerateInputSpec extends AnyFunSuite {
         .select(col("doc_id"), col("text")), 0.5)) === 0L)
     // and the only ≥3-token-free corpus yields zero span-coverage rows
     assert(evaluates(operators.Dedup.dupSpanCoverage(spark, docsDir)) === 0L)
+    // an empty incoming batch delivers no provenance rows
+    assert(evaluates(operators.Dedup.dedupGateProvenance(spark, docsDir)) === 0L)
   }
 
   test("event family evaluates on null/NaN values and same-instant " +

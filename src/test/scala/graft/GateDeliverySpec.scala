@@ -1,7 +1,8 @@
 package graft
 
 import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.streaming.{StreamingDedup, StreamingEmbeddingGate, StreamingMultimodalGate}
+import graft.streaming.{GateDescriptor, StreamingDedup, StreamingEmbeddingGate,
+  StreamingMultimodalGate}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +20,11 @@ class GateDeliverySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
+  /** One batch against a seed's signature rows, under `d`'s rule. */
+  private def classify(d: GateDescriptor, batch: org.apache.spark.sql.DataFrame,
+                       seed: org.apache.spark.sql.DataFrame) =
+    d.classify(batch, d.dataRows(seed))
+
   private def frameOf(df: org.apache.spark.sql.DataFrame): Seq[(String, Any)] =
     df.schema.fields.map(f => f.name -> f.dataType).toSeq
 
@@ -28,12 +34,9 @@ class GateDeliverySpec extends AnyFunSuite {
     val blobs = docs.select(col("doc_id"), col("text").cast("binary").as("payload"))
     val vecs = Seq((500L, Seq.tabulate(64)(_.toDouble))).toDF("vec_id", "embedding")
 
-    val text = StreamingDedup.classify(docs,
-      StreamingDedup.signatureRows(docs).limit(0))
-    val bytes = StreamingMultimodalGate.classify(blobs,
-      StreamingMultimodalGate.signatureRows(blobs).limit(0))
-    val emb = StreamingEmbeddingGate.classify(vecs,
-      StreamingEmbeddingGate.signatureRows(vecs).limit(0))
+    val text = classify(StreamingDedup.descriptor, docs, docs.limit(0))
+    val bytes = classify(StreamingMultimodalGate.descriptor, blobs, blobs.limit(0))
+    val emb = classify(StreamingEmbeddingGate.descriptor, vecs, vecs.limit(0))
 
     val expectedTail = Seq("status" -> StringType,
       "matched_seed" -> LongType, "score" -> DoubleType)
@@ -47,8 +50,7 @@ class GateDeliverySpec extends AnyFunSuite {
     val docs = Tables(spark, sf, "documents")
     val seed = docs.filter(col("doc_id") < 400)
     val incoming = docs.filter(col("doc_id") >= 400)
-    val delivered = StreamingDedup.classify(incoming,
-        StreamingDedup.signatureRows(seed)).collect()
+    val delivered = classify(StreamingDedup.descriptor, incoming, seed).collect()
       .map(r => r.getLong(0) -> r).toMap
     val batch = Dedup.dedupGateProvenance(spark, sf).collect()
     assert(batch.nonEmpty && batch.length == delivered.size)
@@ -85,9 +87,8 @@ class GateDeliverySpec extends AnyFunSuite {
   test("multimodal gate delivery == batch q214 (independent corpus-side derivation)") {
     val blobs = Tables(spark, sf, "documents")
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
-    val delivered = StreamingMultimodalGate.classify(
-        blobs.filter(col("doc_id") >= 400),
-        StreamingMultimodalGate.signatureRows(blobs.filter(col("doc_id") < 400)))
+    val delivered = classify(StreamingMultimodalGate.descriptor,
+        blobs.filter(col("doc_id") >= 400), blobs.filter(col("doc_id") < 400))
       .collect().map(r => r.getLong(0) -> r).toMap
     // q214 derives provenance from the corpus directly (no signature
     // table) — agreement is a genuine cross-check, not code identity
@@ -112,9 +113,9 @@ class GateDeliverySpec extends AnyFunSuite {
       .unionAll(base.filter(col("vec_id") === 7)
         .select(lit(mx + 2).as("vec_id"),
           transform(col("embedding"), x => x * lit(2.0)).as("embedding")))
-    val delivered = StreamingEmbeddingGate.classify(
+    val delivered = classify(StreamingEmbeddingGate.descriptor,
         base.filter(col("vec_id") >= 400).unionAll(twins),
-        StreamingEmbeddingGate.signatureRows(base.filter(col("vec_id") < 400)))
+        base.filter(col("vec_id") < 400))
       .collect().map(r => r.getLong(0) -> r).toMap
     val q216 = Similarity.embeddingGate(spark, sf).collect()
     assert(q216.nonEmpty && q216.length == delivered.size)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{GateLoop, SignatureCompaction, StreamingDedup}
+import graft.streaming.{GateLoop, GateTable, StreamingDedup}
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
@@ -36,6 +36,9 @@ object GatePruningProps extends Properties("GatePruning") {
     dups <- Gen.someOf(seed)
   } yield Case(seed, fresh ++ dups.toList)
 
+  private def table(prefix: String): GateTable = GateTable(
+    StreamingDedup.descriptor, Files.createTempDirectory(prefix).toString)
+
   private def df(texts: Seq[String], base: Long) = {
     import spark.implicits._
     texts.zipWithIndex.map { case (t, i) => (base + i, t) }.toDF("doc_id", "text")
@@ -43,13 +46,13 @@ object GatePruningProps extends Properties("GatePruning") {
 
   property("pruned snapshot classifies exactly like the full table") =
     Prop.forAll(genCase) { c =>
-      val sigDir = Files.createTempDirectory("graft-prune-prop-").toString
-      StreamingDedup.seedSignatures(df(c.seed, 0L), sigDir)
+      val t = table("graft-prune-prop-")
+      t.seed(df(c.seed, 0L))
       val batch = df(c.batch, 1000L)
-      val pbs = StreamingDedup.signatureRows(batch)
+      val pbs = t.desc.signatureRows(batch, t.buckets)
         .select(col("pb")).distinct().collect().map(_.getInt(0)).toSeq
-      def classified(probePbs: Seq[Int]) = StreamingDedup.classify(batch,
-        GateLoop.snapshot(spark, sigDir, StreamingDedup.SigSchema, 0L, probePbs))
+      def classified(probePbs: Seq[Int]) = t.desc.classify(batch,
+        GateLoop.snapshot(spark, t.sigDir, StreamingDedup.SigSchema, 0L, probePbs))
         .collect().map(r => (r.getLong(0), r.getString(1),
           if (r.isNullAt(2)) -1L else r.getLong(2),
           if (r.isNullAt(3)) -1.0 else r.getDouble(3))).toSet
@@ -58,23 +61,20 @@ object GatePruningProps extends Properties("GatePruning") {
 
   property("history fold + compact never change classification") =
     Prop.forAll(genCase) { c =>
-      val sigDir = Files.createTempDirectory("graft-fold-prop-").toString
-      StreamingDedup.seedSignatures(df(c.seed, 0L), sigDir)
+      val t = table("graft-fold-prop-")
+      t.seed(df(c.seed, 0L))
       // two micro-batches build real batch partitions
       val halves = c.batch.grouped(math.max(1, (c.batch.size + 1) / 2)).toSeq
       halves.zipWithIndex.foreach { case (h, i) =>
-        GateLoop.processBatch(df(h, 1000L + 100 * i), i.toLong, sigDir,
-          StreamingDedup.SigSchema, "doc_id", StreamingDedup.classify,
-          StreamingDedup.signatureRows, (_, _) => ())
+        t.processBatch(df(h, 1000L + 100 * i), i.toLong, (_, _) => ())
       }
-      def probe() = StreamingDedup.classify(df(c.seed ++ c.batch, 5000L),
-        spark.read.schema(StreamingDedup.SigSchema).parquet(sigDir))
+      def probe() = t.classifyNow(df(c.seed ++ c.batch, 5000L))
         .collect().map(r => (r.getLong(0), r.getString(1),
           if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
       val before = probe()
-      SignatureCompaction.foldHistory(spark, sigDir, keepLast = 1)
+      t.foldHistory(spark, keepLast = 1)
       val afterFold = probe()
-      SignatureCompaction.compact(spark, sigDir, StreamingDedup.SigSchema)
+      t.compact(spark)
       val afterCompact = probe()
       before == afterFold && before == afterCompact
     }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{GateLoop, StreamingDedup}
+import graft.streaming.{GateLoop, GateTable, StreamingDedup}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,8 +20,13 @@ class GatePruningSpec extends AnyFunSuite {
       "and pruned classification equals the full-table answer") {
     val sf = "/root/testdata/sf0.001"
     val docs = Tables(spark, sf, "documents")
-    val sigDir = Files.createTempDirectory("graft-prune-sigs-").toString
-    StreamingDedup.seedSignatures(docs.filter(col("doc_id") < 400), sigDir)
+    val t = GateTable(StreamingDedup.descriptor,
+      Files.createTempDirectory("graft-prune-sigs-").toString)
+    t.seed(docs.filter(col("doc_id") < 400))
+    val sigDir = t.sigDir
+    def probeBuckets(b: org.apache.spark.sql.DataFrame): Seq[Int] =
+      t.desc.signatureRows(b, t.buckets)
+        .select(col("pb")).distinct().collect().map(_.getInt(0)).toSeq
 
     // the seed must fan out over many buckets or the proof is degenerate
     val totalPbDirs = new java.io.File(s"$sigDir/batch=-1").listFiles()
@@ -30,8 +35,7 @@ class GatePruningSpec extends AnyFunSuite {
 
     // one-doc batch: its probe keys are 1 sha + ≤2 bands → ≤3 buckets
     val batch = docs.filter(col("doc_id") === 450)
-    val probePbs = StreamingDedup.signatureRows(batch)
-      .select(col("pb")).distinct().collect().map(_.getInt(0)).toSeq
+    val probePbs = probeBuckets(batch)
     assert(probePbs.nonEmpty && probePbs.size <= 3)
 
     val snap = GateLoop.snapshot(spark, sigDir, StreamingDedup.SigSchema,
@@ -54,12 +58,11 @@ class GatePruningSpec extends AnyFunSuite {
     val full = GateLoop.snapshot(spark, sigDir, StreamingDedup.SigSchema,
       excludeBatchId = 0L, probePbs = 0 until GateLoop.NumBuckets)
     val incoming = docs.filter(col("doc_id") >= 400)
-    val incomingPbs = StreamingDedup.signatureRows(incoming)
-      .select(col("pb")).distinct().collect().map(_.getInt(0)).toSeq
+    val incomingPbs = probeBuckets(incoming)
     val pruned = GateLoop.snapshot(spark, sigDir, StreamingDedup.SigSchema,
       excludeBatchId = 0L, probePbs = incomingPbs)
     def classified(s: org.apache.spark.sql.DataFrame) =
-      StreamingDedup.classify(incoming, s).collect()
+      t.desc.classify(incoming, s).collect()
         .map(r => (r.getLong(0), r.getString(1),
           if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
     val a = classified(pruned)
@@ -69,10 +72,10 @@ class GatePruningSpec extends AnyFunSuite {
 
   test("an empty batch probes nothing: the snapshot is empty without a scan error") {
     import spark.implicits._
-    val sigDir = Files.createTempDirectory("graft-prune-empty-").toString
-    StreamingDedup.seedSignatures(
-      Seq((0L, "seed corpus document body")).toDF("doc_id", "text"), sigDir)
-    val snap = GateLoop.snapshot(spark, sigDir, StreamingDedup.SigSchema,
+    val t = GateTable(StreamingDedup.descriptor,
+      Files.createTempDirectory("graft-prune-empty-").toString)
+    t.seed(Seq((0L, "seed corpus document body")).toDF("doc_id", "text"))
+    val snap = GateLoop.snapshot(spark, t.sigDir, StreamingDedup.SigSchema,
       excludeBatchId = 0L, probePbs = Nil)
     assert(snap.count() == 0)
   }

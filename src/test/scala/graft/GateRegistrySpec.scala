@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.streaming.{GateDeliveries, GateLoop, GateTable, StreamingDedup,
-  StreamingEmbeddingGate}
+import graft.streaming.{GateDeliveries, GateLoop, GateTable, StreamingDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -59,22 +58,6 @@ class GateRegistrySpec extends AnyFunSuite {
     t.processBatch(docs(2L -> "alpha bravo charlie delta"), 1L,
       (f, _) => got = statuses(f))
     assert(got === Map(2L -> "exact_dup")) // batch-0 state survived it all
-  }
-
-  test("typed seed/classifyNow match the legacy string-typed path exactly") {
-    val seed = docs(0L -> "the original seed corpus document",
-      1L -> "alpha bravo charlie delta echo")
-    val incoming = docs(10L -> "the original seed corpus document",
-      11L -> "a never seen probe document body")
-    val typed = textTable()
-    typed.seed(seed)
-    val legacyDir = Files.createTempDirectory("graft-registry-legacy-").toString
-    StreamingDedup.seedSignatures(seed, legacyDir)
-    val legacy = StreamingDedup.classify(incoming,
-      spark.read.schema(StreamingDedup.SigSchema).parquet(legacyDir))
-    assert(typed.classifyNow(incoming).collect().toSet ===
-      legacy.collect().toSet)
-    assert(typed.buckets === GateLoop.NumBuckets)
   }
 
   test("resize rewrites the pb layout under the new fan-out with " +
@@ -145,40 +128,28 @@ class GateRegistrySpec extends AnyFunSuite {
     val incoming = corpus.filter(col("doc_id") >= 400)
     val inPbs = t.desc.signatureRows(incoming, t.buckets)
       .select(col("pb")).distinct().collect().map(_.getInt(0)).toSeq
-    val pruned = StreamingDedup.classify(incoming, GateLoop.snapshot(
+    val pruned = t.desc.classify(incoming, GateLoop.snapshot(
       spark, t.sigDir, t.desc.sigSchema, 0L, inPbs)).collect().toSet
-    val full = StreamingDedup.classify(incoming,
-      t.read(spark)).collect().toSet
+    val full = t.classifyNow(incoming).collect().toSet
     assert(pruned === full, "pruned snapshot drifted after resize")
   }
 
-  test("the string-typed loop refuses a resized table instead of " +
-      "mis-hashing its probes") {
+  test("a table without the bucket marker (written before the marker " +
+      "existed) still runs at the default fan-out") {
     val t = textTable()
     t.seed(docs(0L -> "the original seed corpus document"))
-    t.resize(spark, targetBuckets = 4)
-    val e = intercept[IllegalArgumentException] {
-      GateLoop.processBatch(docs(1L -> "anything at all"), 0L, t.sigDir,
-        StreamingDedup.SigSchema, "doc_id", StreamingDedup.classify,
-        StreamingDedup.signatureRows, (_, _) => ())
-    }
-    assert(e.getMessage.contains("GateTable"))
-  }
-
-  test("the embedding descriptor's typed surface matches the gate's " +
-      "legacy path (pb over the hyperplane bucket)") {
-    import spark.implicits._
-    val seed = Seq((0L, Array(1.0, 0.0, 2.0, 1.0)),
-      (1L, Array(0.5, 1.5, -0.5, 2.0))).toDF("vec_id", "embedding")
-    val incoming = Seq((10L, Array(1.0, 0.0, 2.0, 1.0)),
-      (11L, Array(9.0, -3.0, 4.0, 0.1))).toDF("vec_id", "embedding")
-    val t = GateTable(StreamingEmbeddingGate.descriptor,
-      Files.createTempDirectory("graft-registry-emb-").toString)
-    t.seed(seed)
-    val got = statuses(t.classifyNow(incoming))
-    assert(got === Map(10L -> "exact_dup", 11L -> "new"))
-    t.resize(spark, targetBuckets = 2)
-    assert(statuses(t.classifyNow(incoming)) === got)
+    Files.delete(Paths.get(t.sigDir, GateLoop.BucketsMeta))
+    assert(t.buckets === GateLoop.NumBuckets)
+    var got = Map.empty[Long, String]
+    t.processBatch(docs(1L -> "the original seed corpus document",
+      2L -> "alpha bravo charlie delta"), 0L, (f, _) => got = statuses(f))
+    assert(got === Map(1L -> "exact_dup", 2L -> "new"))
+    // the batch's signatures landed at the default hash: the next probe
+    // finds them
+    t.processBatch(docs(3L -> "alpha bravo charlie delta"), 1L,
+      (f, _) => got = statuses(f))
+    assert(got === Map(3L -> "exact_dup"))
+    assert(pbDirs(t.sigDir).forall(b => b >= 0 && b < GateLoop.NumBuckets))
   }
 
   test("seeding over live batch partitions is refused (re-pinning the " +

@@ -56,13 +56,13 @@ object GateResizeProps extends Properties("GateResize") {
       def probePrunedLikeGateLoop() = {
         val pbs = t.desc.signatureRows(probeDocs, t.buckets)
           .select(col("pb")).distinct().collect().map(_.getInt(0)).toSeq
-        StreamingDedup.classify(probeDocs, GateLoop.snapshot(spark,
+        t.desc.classify(probeDocs, GateLoop.snapshot(spark,
           t.sigDir, t.desc.sigSchema, Long.MinValue, pbs))
           .collect().map(r => (r.getLong(0), r.getString(1),
             if (r.isNullAt(2)) -1L else r.getLong(2),
             if (r.isNullAt(3)) -1.0 else r.getDouble(3))).toSet
       }
-      def probeFull() = StreamingDedup.classify(probeDocs, t.read(spark))
+      def probeFull() = t.desc.classify(probeDocs, t.read(spark))
         .collect().map(r => (r.getLong(0), r.getString(1),
           if (r.isNullAt(2)) -1L else r.getLong(2),
           if (r.isNullAt(3)) -1.0 else r.getDouble(3))).toSet

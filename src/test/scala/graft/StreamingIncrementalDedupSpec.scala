@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Dedup
-import graft.streaming.StreamingDedup
+import graft.streaming.{GateTable, StreamingDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -16,6 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamingIncrementalDedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  private def table(): GateTable = GateTable(StreamingDedup.descriptor,
+    Files.createTempDirectory("graft-sigs-").toString)
+
   private def collectStatuses(buf: scala.collection.mutable.Map[Long, String])
                              (classified: DataFrame, batchId: Long): Unit = {
     val rows = classified.collect()
@@ -27,10 +30,10 @@ class StreamingIncrementalDedupSpec extends AnyFunSuite {
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
     val docs = Tables(spark, sf, "documents")
-    val sigDir = Files.createTempDirectory("graft-sigs-").toString
+    val t = table()
 
     // same split as the q79 oracle query: corpus = doc_id < 400, new ≥ 400
-    StreamingDedup.seedSignatures(docs.filter(col("doc_id") < 400), sigDir)
+    t.seed(docs.filter(col("doc_id") < 400))
     val expected = Dedup.incrementalDedup(docs, col("doc_id") >= 400)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
@@ -39,7 +42,7 @@ class StreamingIncrementalDedupSpec extends AnyFunSuite {
     stream.addData(docs.filter(col("doc_id") >= 400)
       .select(col("doc_id"), col("text"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq: _*)
-    val q = StreamingDedup.start(stream.toDS().toDF("doc_id", "text"), sigDir,
+    val q = t.start(stream.toDS().toDF("doc_id", "text"),
       collectStatuses(got), trigger = Trigger.AvailableNow())
     q.awaitTermination(120000)
 
@@ -53,11 +56,10 @@ class StreamingIncrementalDedupSpec extends AnyFunSuite {
   test("restart without rescan: table state survives, processed batches don't replay") {
     import spark.implicits._
     val srcDir = Files.createTempDirectory("graft-docsrc-").toString
-    val sigDir = Files.createTempDirectory("graft-sigs-").toString
+    val t = table()
     val ckpt = Files.createTempDirectory("graft-ckpt-").toString
 
-    StreamingDedup.seedSignatures(
-      Seq((0L, "seed corpus document body")).toDF("doc_id", "text"), sigDir)
+    t.seed(Seq((0L, "seed corpus document body")).toDF("doc_id", "text"))
 
     def docStream = spark.readStream
       .schema("doc_id LONG, text STRING").parquet(srcDir)
@@ -67,7 +69,7 @@ class StreamingIncrementalDedupSpec extends AnyFunSuite {
       (3L, "second fresh document"))
       .toDF("doc_id", "text").write.mode("append").parquet(srcDir)
     val got1 = scala.collection.mutable.Map[Long, String]()
-    val q1 = StreamingDedup.start(docStream, sigDir, collectStatuses(got1),
+    val q1 = t.start(docStream, collectStatuses(got1),
       checkpointDir = Some(ckpt), trigger = Trigger.AvailableNow())
     q1.awaitTermination(120000)
     assert(got1.toMap === Map(1L -> "exact_dup", 2L -> "new", 3L -> "new"))
@@ -78,7 +80,7 @@ class StreamingIncrementalDedupSpec extends AnyFunSuite {
     Seq((4L, "first fresh document"), (5L, "genuinely new third document"))
       .toDF("doc_id", "text").write.mode("append").parquet(srcDir)
     val got2 = scala.collection.mutable.Map[Long, String]()
-    val q2 = StreamingDedup.start(docStream, sigDir, collectStatuses(got2),
+    val q2 = t.start(docStream, collectStatuses(got2),
       checkpointDir = Some(ckpt), trigger = Trigger.AvailableNow())
     q2.awaitTermination(120000)
     assert(got2.keySet === Set(4L, 5L)) // docs 1-3 not re-delivered
@@ -86,7 +88,7 @@ class StreamingIncrementalDedupSpec extends AnyFunSuite {
 
     // the table holds exactly the seed + the three accepted docs' signatures,
     // each once (batch=<id> partition overwrite keeps appends idempotent)
-    val sigs = spark.read.parquet(sigDir).select("kind", "sig")
+    val sigs = spark.read.parquet(t.sigDir).select("kind", "sig")
     assert(sigs.count() == sigs.distinct().count())
     assert(sigs.filter(col("kind") === "h").count() == 4) // docs 0, 2, 3, 5
   }

@@ -3,13 +3,14 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Similarity
-import graft.streaming.{GateTable, StreamingDedup, StreamingEmbeddingGate,
-  StreamingJointGate}
+import graft.streaming.{GateTable, JointTables, StreamingDedup,
+  StreamingEmbeddingGate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[StreamingJointGate]] — q221's continuous twin: per micro-batch,
+/** [[graft.streaming.StreamingJointGate]] — q221's continuous twin,
+  * run on the table pair ([[JointTables.processBatch]]): per micro-batch,
   * (text, embedding) items admit only if BOTH surfaces accept, each
   * surface probing its own signature table under GateLoop's discipline. */
 class StreamingJointGateSpec extends AnyFunSuite {
@@ -43,7 +44,7 @@ class StreamingJointGateSpec extends AnyFunSuite {
       .join(emb2.filter(col("vec_id") >= 400)
         .select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"))
     var got: Set[(Long, String, String, String)] = Set.empty
-    StreamingJointGate.processBatch(items, 0L, textT, vecT,
+    JointTables(textT, vecT).processBatch(items, 0L,
       (frame, _) => got = frameSet(frame))
     assert(got === frameSet(Similarity.jointGate(spark, sf)))
     assert(got.exists(_._4 == "near_dup") && got.exists(_._4 == "exact_dup"))
@@ -64,7 +65,7 @@ class StreamingJointGateSpec extends AnyFunSuite {
 
     var frames = Map.empty[Long, Set[(Long, String, String, String)]]
     def run(b: DataFrame, id: Long): Unit =
-      StreamingJointGate.processBatch(b, id, textT, vecT,
+      JointTables(textT, vecT).processBatch(b, id,
         (f, i) => frames += i -> f.collect()
           .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).toSet)
 
@@ -111,7 +112,7 @@ class StreamingJointGateSpec extends AnyFunSuite {
 
     var frames = Map.empty[Long, Set[(Long, String, String, String)]]
     def run(b: DataFrame, id: Long): Unit =
-      StreamingJointGate.processBatch(b, id, textT, mmT,
+      JointTables(textT, mmT).processBatch(b, id,
         (f, i) => frames += i -> f.collect()
           .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).toSet)
 

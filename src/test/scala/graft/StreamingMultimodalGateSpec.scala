@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Multimodal
-import graft.streaming.StreamingMultimodalGate
+import graft.streaming.{GateLoop, GateTable, StreamingMultimodalGate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -22,6 +22,9 @@ class StreamingMultimodalGateSpec extends AnyFunSuite {
     val rows = classified.collect()
     buf.synchronized { rows.foreach(r => buf(r.getLong(0)) = r.getString(1)) }
   }
+
+  private def table(): GateTable = GateTable(StreamingMultimodalGate.descriptor,
+    Files.createTempDirectory("graft-mmsigs-").toString)
 
   private def blobs(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
@@ -64,14 +67,13 @@ class StreamingMultimodalGateSpec extends AnyFunSuite {
       && expected(9002L) == "new")
     assert(expected.count(_._2 == "near_dup") >= 1)
 
-    val sigDir = Files.createTempDirectory("graft-mmsigs-").toString
-    StreamingMultimodalGate.seedSignatures(seed, sigDir)
+    val t = table()
+    t.seed(seed)
     val got = scala.collection.mutable.Map[Long, String]()
     val stream = MemoryStream[(Long, Array[Byte])]
     stream.addData(streamed.collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toSeq: _*)
-    val q = StreamingMultimodalGate.start(
-      stream.toDS().toDF("doc_id", "payload"), sigDir,
+    val q = t.start(stream.toDS().toDF("doc_id", "payload"),
       collectStatuses(got), trigger = Trigger.AvailableNow())
     q.awaitTermination(120000)
     assert(got.toMap === expected,
@@ -81,11 +83,12 @@ class StreamingMultimodalGateSpec extends AnyFunSuite {
   test("restart without rescan: sketch table survives, processed batches don't replay") {
     import spark.implicits._
     val srcDir = Files.createTempDirectory("graft-mmsrc-").toString
-    val sigDir = Files.createTempDirectory("graft-mmsigs-").toString
+    val t = table()
+    val sigDir = t.sigDir
     val ckpt = Files.createTempDirectory("graft-mmckpt-").toString
 
     val base = "the quick brown fox jumps over the lazy dog payload body"
-    StreamingMultimodalGate.seedSignatures(blobs(Seq((0L, base))), sigDir)
+    t.seed(blobs(Seq((0L, base))))
 
     def blobStream = spark.readStream
       .schema("doc_id LONG, payload BINARY").parquet(srcDir)
@@ -96,7 +99,7 @@ class StreamingMultimodalGateSpec extends AnyFunSuite {
     writeBatch((1L, base), (2L, base + " x"),
       (3L, "completely different bytes with no shared windows at all here"))
     val got1 = scala.collection.mutable.Map[Long, String]()
-    val q1 = StreamingMultimodalGate.start(blobStream, sigDir,
+    val q1 = t.start(blobStream,
       collectStatuses(got1), checkpointDir = Some(ckpt),
       trigger = Trigger.AvailableNow())
     q1.awaitTermination(120000)
@@ -108,7 +111,7 @@ class StreamingMultimodalGateSpec extends AnyFunSuite {
       (4L, "completely different bytes with no shared windows at all here"),
       (5L, "yet another payload with its own fully distinct byte content"))
     val got2 = scala.collection.mutable.Map[Long, String]()
-    val q2 = StreamingMultimodalGate.start(blobStream, sigDir,
+    val q2 = t.start(blobStream,
       collectStatuses(got2), checkpointDir = Some(ckpt),
       trigger = Trigger.AvailableNow())
     q2.awaitTermination(120000)
@@ -127,13 +130,11 @@ class StreamingMultimodalGateSpec extends AnyFunSuite {
     // classification against the table must be unchanged
     val probe = blobs(Seq((100L, base), (101L, base + " x"),
       (102L, "an entirely new probe payload unlike anything stored here")))
-    def classifyProbe() = graft.streaming.StreamingMultimodalGate.classify(
-      probe, spark.read.schema(StreamingMultimodalGate.SigSchema).parquet(sigDir))
+    def classifyProbe() = t.classifyNow(probe)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val before = classifyProbe()
     assert(before === Map(100L -> "exact_dup", 101L -> "near_dup", 102L -> "new"))
-    val foldedN = graft.streaming.SignatureCompaction.compact(
-      spark, sigDir, StreamingMultimodalGate.SigSchema)
+    val foldedN = t.compact(spark)
     assert(foldedN >= 2, s"expected >=2 batch partitions folded, got $foldedN")
     assert(classifyProbe() === before, "compaction changed classification")
     // layout: only batch=-1 remains, probe-bucket sub-partitioned, with a
@@ -143,7 +144,7 @@ class StreamingMultimodalGateSpec extends AnyFunSuite {
     assert(dirs.toSeq === Seq("batch=-1"), dirs.toSeq.toString)
     val pbDirs = new java.io.File(s"$sigDir/batch=-1").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("pb="))
-    assert(pbDirs.nonEmpty && pbDirs.length <= graft.streaming.GateLoop.NumBuckets)
+    assert(pbDirs.nonEmpty && pbDirs.length <= GateLoop.NumBuckets)
     pbDirs.foreach(d => assert(
       d.listFiles().count(_.getName.endsWith(".parquet")) == 1,
       s"${d.getName} not folded to one bounded file"))
@@ -151,7 +152,6 @@ class StreamingMultimodalGateSpec extends AnyFunSuite {
     val after = spark.read.schema(StreamingMultimodalGate.SigSchema)
       .parquet(sigDir).select("kind", "sig", "simhash")
     assert(after.count() == after.distinct().count() && after.count() == nSigs)
-    assert(graft.streaming.SignatureCompaction.compact(
-      spark, sigDir, StreamingMultimodalGate.SigSchema) == 0)
+    assert(t.compact(spark) == 0)
   }
 }

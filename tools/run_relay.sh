@@ -12,8 +12,9 @@
 #   tools/run_relay.sh --in /data/bodies --out /data/sink \
 #       [--stream-name metrics] [--firehose] [--write-interval 10] \
 #       [--listen-addr 9501] [--region ap-northeast-1] \
-#       [--analytics rate|range-rate|topk|staleness]  (+ mode knobs, see
-#        RelayMain scaladoc: --rate-ttl/--range-window/--stale-after/--topk)
+#       [--analytics <mode>[,<mode>...]]  (the modes are RelayMain.Modes in
+#        src/main/scala/graft/streaming/RelayMain.scala; mode knobs and the
+#        other options are listed in RelayMain's scaladoc)
 #
 # Env: SPARK_HOME (default /opt/spark), SPARK_GRAFT_CPUS (default 4).
 set -euo pipefail
