@@ -36,6 +36,9 @@ object PlanHash {
       .replaceAll("/tmp/[^\\s,\\]\\)]+", "<tmp>")
       .replaceAll("(?m)^.*Location.*$", "Location: <path>")
       .replaceAll("MapPartitionsRDD\\[\\d+\\]", "MapPartitionsRDD[x]")
+      // an RDD's call site (` at localCheckpoint at Dedup.scala:1079`)
+      // moves with every edit above it in the operator file
+      .replaceAll(" at [\\w$.<>]+ at [\\w$]+\\.scala:\\d+", "")
       .replaceAll("rdd_\\d+", "rdd_x")
       .replaceAll("@[0-9a-f]{6,}", "@x") // JVM object identity hashes
       // JIT-assigned lambda class names: Foo$$Lambda$123/0x00007f…

@@ -36,7 +36,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * (= partition) and its own sequence; the Spark side reads one stream per
   * directory exactly like multiple Kafka partitions.
   */
-class HttpFrontend(dir: String, port: Int, validate: Boolean = true) {
+class HttpFrontend(dir: String, port: Int) {
 
   Files.createDirectories(Paths.get(dir))
   // resume numbering after existing bodies — names must keep ascending for
@@ -77,17 +77,15 @@ class HttpFrontend(dir: String, port: Int, validate: Boolean = true) {
         try x.getRequestBody.readNBytes(HttpFrontend.MaxBodyBytes + 1)
         catch { case e: Exception => respond(x, 500, String.valueOf(e.getMessage)); return }
       if (body.length > HttpFrontend.MaxBodyBytes) { respond(x, 413); return }
-      if (validate) {
-        // the declared length is read from the frame header before any
-        // decompression, so a small bomb costs only its own bytes
-        val declaredOut =
-          try org.xerial.snappy.Snappy.uncompressedLength(body)
-          catch { case e: Exception => respond(x, 400, String.valueOf(e.getMessage)); return }
-        // negative: a declared length of 2 GiB or more, wrapped to an Int
-        if (declaredOut < 0 || declaredOut > HttpFrontend.MaxBodyBytes) { respond(x, 413); return }
-        try Prompb.decode(org.xerial.snappy.Snappy.uncompress(body))
+      // the declared length is read from the frame header before any
+      // decompression, so a small bomb costs only its own bytes
+      val declaredOut =
+        try org.xerial.snappy.Snappy.uncompressedLength(body)
         catch { case e: Exception => respond(x, 400, String.valueOf(e.getMessage)); return }
-      }
+      // negative: a declared length of 2 GiB or more, wrapped to an Int
+      if (declaredOut < 0 || declaredOut > HttpFrontend.MaxBodyBytes) { respond(x, 413); return }
+      try Prompb.decode(org.xerial.snappy.Snappy.uncompress(body))
+      catch { case e: Exception => respond(x, 400, String.valueOf(e.getMessage)); return }
       val tmp = Files.createTempFile(Paths.get(dir), ".ingest-", ".tmp")
       writeDurable(tmp, body)
       admitLock.synchronized {

@@ -102,7 +102,7 @@ object RemoteWrite {
     * infer it would scan every record file twice and, on a null-only
     * window, type `value` as string — schema-on-read at 100 TB means
     * declaring the schema, not discovering it. Reads the `.jsonl` files a
-    * `KinesisFileSink`/`FirehoseFileSink` (or a real consumer dump) wrote;
+    * `KinesisFileSink` (or a real consumer dump) wrote;
     * corrupt lines surface as all-null rows (default PERMISSIVE mode), the
     * read-side mirror of the relay's log-and-drop delivery. */
   def readRecords(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =

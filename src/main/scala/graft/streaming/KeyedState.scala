@@ -5,13 +5,14 @@ import java.time.Duration
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoder, KeyValueGroupedDataset}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TTLConfig,
+  TimeMode, TimerValues, ValueState}
 
 /** The keyed-state kernel the `transformWithState` twins share: the TTL
-  * wiring ([[KeyedState.transform]]), the one-`ValueState` fold
-  * ([[ValueStateFold]]) and the day-seal rule of the daily twins
-  * ([[DaySealFold]]). */
+  * wiring ([[KeyedState.transform]]), the per-entry `MapState` fold
+  * ([[KeyedState.foldEntries]]), the pane-seal loop ([[KeyedState.sealLoop]]),
+  * the one-`ValueState` fold ([[ValueStateFold]]), the day-seal rule of the
+  * daily twins ([[DaySealFold]]) and the PromQL counter rule ([[Counter]]). */
 private[streaming] object KeyedState {
 
   val UsPerDay = 86400000000L
@@ -31,6 +32,58 @@ private[streaming] object KeyedState {
                                   ttl: Option[Duration])
                                  (mk: TTLConfig => StatefulProcessor[K, I, O]): Dataset[O] =
     groups.transformWithState(mk(ttlConfig(ttl)), timeMode(ttl), outputMode)
+
+  /** `map`'s value at `k`; None when none is stored (a new entry, or one
+    * TTL evicted). */
+  def entry[K, V](map: MapState[K, V], k: K): Option[V] =
+    if (map.containsKey(k)) Some(map.getValue(k)) else None
+
+  /** Folds `rows` into `map` entry by entry: rows group by `key`, keeping
+    * their order, and each group's rows `step` one at a time from the
+    * entry's stored value; the last result replaces it. */
+  def foldEntries[K, I, V](map: MapState[K, V], rows: Seq[I])(key: I => K)
+                          (step: (Option[V], I) => V): Unit =
+    rows.groupBy(key).foreach { case (k, group) =>
+      map.updateValue(k, group.foldLeft(entry(map, k))((v, row) => Some(step(v, row))).get)
+    }
+
+  /** The seal loop of the paned twins, over `rows` in pane order. The state
+    * holds one OPEN pane (`openPane`, Long.MinValue before the first row).
+    * A row of the open pane enters it; the first row of a LATER pane seals
+    * the open pane and then enters, opening its own; a row BEHIND the open
+    * pane goes to `late`, because it cannot be spliced into a sealed pane. */
+  def sealLoop[I, S](s0: S, rows: Seq[I])(pane: I => Long, openPane: S => Long)
+                    (late: S => S, seal: S => S, enter: (S, Long, I) => S): S =
+    rows.foldLeft(s0) { (s, row) =>
+      val p = pane(row)
+      val open = openPane(s)
+      if (p < open) late(s)
+      else enter(if (p > open && open != Long.MinValue) seal(s) else s, p, row)
+    }
+}
+
+/** The PromQL counter rule of the counter twins (README, "Counter rule"):
+  * a series' samples order by (ts, value); a sample strictly behind the
+  * (ts, value) high-water mark is late; a value below its predecessor is a
+  * counter reset, whose increase is the whole new value; a per-second rate
+  * needs a positive time span. */
+private[streaming] object Counter {
+
+  /** `(ts, value)` is strictly behind the high-water mark `(hwmTs, hwmValue)`:
+    * an equal-ts row with value ≥ `hwmValue` is the NEXT element of the
+    * (ts, value) order, not a splice into the past. */
+  def late(ts: Long, value: Double, hwmTs: Long, hwmValue: Double): Boolean =
+    ts < hwmTs || (ts == hwmTs && value < hwmValue)
+
+  def reset(prev: Double, value: Double): Boolean = value - prev < 0
+
+  /** The reset-corrected increase from `prev` to `value`. */
+  def increase(prev: Double, value: Double): Double =
+    if (reset(prev, value)) value else value - prev
+
+  /** `inc` per second over `dtUs` microseconds, rounded; None unless dt > 0. */
+  def rate(inc: Double, dtUs: Long): Option[Double] =
+    if (dtUs > 0L) Some(Rounding.r6(inc / (dtUs / 1e6))) else None
 }
 
 /** A processor whose whole per-key state is one `ValueState[S]` named
@@ -60,16 +113,14 @@ private[streaming] abstract class ValueStateFold[K, I, S, O](
 }
 
 /** The day-seal rule of the daily twins (StreamingTrend, StreamingMeanShift,
-  * StreamingForecast, StreamingDrift, StreamingTheilSen), keyed by group.
-  * Rows inside a micro-batch sort by `tsUs`; a row's day is
-  * `tsUs / UsPerDay`. The state holds one OPEN day. A row of the open day
-  * enters it; the first row of a LATER day seals the open day (the twin
-  * folds it into its closed-day state and emits what it scores) and opens
-  * its own day; a row BEHIND the open day is counted in the state's
-  * `nLate` and dropped, because it cannot be spliced into a sealed day.
-  * The last day a group has seen stays open until a later row arrives.
-  * A twin supplies its zero state, how a row enters the open day, and
-  * what a sealed day folds into and emits. */
+  * StreamingForecast, StreamingDrift, StreamingTheilSen), keyed by group:
+  * [[KeyedState.sealLoop]] with a row's day, `tsUs / UsPerDay`, as its
+  * pane, over the micro-batch's rows sorted by `tsUs`. A sealed day folds
+  * into the twin's closed-day state and emits what it scores; a late row is
+  * counted in the state's `nLate` and dropped. The last day a group has
+  * seen stays open until a later row arrives. A twin supplies its zero
+  * state, how a row enters the open day, and what a sealed day folds into
+  * and emits. */
 private[streaming] abstract class DaySealFold[I, S, O](
     stateName: String, stateEncoder: => Encoder[S], ttl: TTLConfig)
     extends ValueStateFold[String, I, S, O](stateName, stateEncoder, ttl) {
@@ -90,17 +141,7 @@ private[streaming] abstract class DaySealFold[I, S, O](
   protected def seal(key: String, s: S, emit: O => Unit): S
 
   final override protected def fold(key: String, s0: S, rows: Iterator[I],
-                                    emit: O => Unit): S = {
-    var s = s0
-    rows.toVector.sortBy(tsUs).foreach { row =>
-      val day = tsUs(row) / KeyedState.UsPerDay
-      val open = openDay(s)
-      if (day < open) s = late(s)
-      else {
-        if (day > open && open != Long.MinValue) s = seal(key, s, emit)
-        s = enter(s, day, row)
-      }
-    }
-    s
-  }
+                                    emit: O => Unit): S =
+    KeyedState.sealLoop(s0, rows.toVector.sortBy(tsUs))(tsUs(_) / KeyedState.UsPerDay,
+      openDay)(late, seal(key, _, emit), enter)
 }

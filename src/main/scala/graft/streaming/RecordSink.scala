@@ -61,8 +61,9 @@ object Chunker {
   * (at-most-once, `kinesis.go:109-111,139-141`).
   *
   * NOTE: no AWS SDK exists in this environment (zero egress, SURVEY.md §2.4);
-  * `KinesisFileSink`/`FirehoseFileSink` are faithful local emulations — the
-  * trait boundary is where a real `PutRecords`/`PutRecordBatch` call slots in.
+  * `KinesisFileSink` is a faithful local emulation of both streams (Firehose
+  * entries reach it keyless, [[RelayPipeline.deliver]]) — the trait
+  * boundary is where a real `PutRecords`/`PutRecordBatch` call slots in.
   */
 trait RecordSink extends Serializable {
   def send(batch: Seq[SinkEntry]): Unit
@@ -102,9 +103,9 @@ object RecordSink {
   * keys ARE recorded, mirroring shard-key affinity (`kinesis.go:174`): a
   * dot-prefixed sidecar (`.<file>.keys` — hidden from Spark globs, so
   * the stream dir still reads as a clean jsonl table) holds one JSON value
-  * per entry, the key string or `null`, in entry order. Review catch:
-  * without it the kinesis and firehose emulations produced byte-identical
-  * output and the documented distinction was unobservable.
+  * per entry, the key string or `null`, in entry order. Firehose mode's
+  * entries arrive keyless ([[RelayPipeline.deliver]]), so its sidecars hold
+  * only `null`: the sidecar is what makes the two modes' output differ.
   */
 final class KinesisFileSink(dir: String, streamName: String,
                             val region: String = RecordSink.defaultRegion,
@@ -186,16 +187,6 @@ object KinesisFileSink {
     }
 }
 
-/** Firehose `PutRecordBatch` emulation — identical shape, no partition key
-  * (`/root/reference/firehose.go:174-185`). */
-final class FirehoseFileSink(dir: String, deliveryStreamName: String,
-                             val region: String = RecordSink.defaultRegion)
-    extends RecordSink {
-  private val inner = new KinesisFileSink(dir, deliveryStreamName, region)
-  def send(batch: Seq[SinkEntry]): Unit =
-    inner.send(batch.map(_.copy(partitionKey = None)))
-}
-
 /** Exactly-once delivery: the `batch=<id>` partition-overwrite pattern
   * proven by [[StreamingDedup]]'s signature table, lifted into the sink
   * seam. Each chunk lands at a DETERMINISTIC path —
@@ -210,15 +201,14 @@ final class FirehoseFileSink(dir: String, deliveryStreamName: String,
   * Unlike the at-most-once sinks, an I/O error here THROWS: the task
   * retries / the micro-batch replays, and idempotence makes the retry
   * safe — dropping on error (the reference's policy) is exactly what
-  * exactly-once forbids. `firehose=true` strips partition keys like
-  * [[FirehoseFileSink]] (`firehose.go:165-167`).
+  * exactly-once forbids. Keys are recorded as they arrive: Firehose mode
+  * sends none (`RelayPipeline.deliver`, `firehose.go:165-167`).
   *
   * Scale: one directory per micro-batch, one file per (partition, chunk) —
   * the layout object stores want (no append, no rename across prefixes
   * beyond the atomic temp move), and a downstream consumer reads
   * `batch=*` as a Hive-partitioned table. */
 final class ExactlyOnceFileSink(dir: String, streamName: String,
-                                firehose: Boolean = false,
                                 val region: String = RecordSink.defaultRegion)
     extends RecordSink {
   /** Coordinate-free send has no replay identity — refuse it loudly rather
@@ -273,15 +263,14 @@ final class ExactlyOnceFileSink(dir: String, streamName: String,
     val tmp = java.io.File.createTempFile("." + target.getName + ".", ".tmp", batchDir)
     val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(tmp))
     try {
-      val payload = if (firehose) batch.map(_.copy(partitionKey = None)) else batch
-      try payload.foreach(e => out.write(e.data))
+      try batch.foreach(e => out.write(e.data))
       finally out.close()
       // keys sidecar first (dot-prefixed — invisible to Spark globs, so
       // batch=* still reads as a clean table), then the atomic data move:
       // a crash between the two leaves a sidecar the next attempt's
       // self-heal or beginBatch clears
       KinesisFileSink.writeKeys(
-        new java.io.File(batchDir, "." + target.getName + ".keys"), payload)
+        new java.io.File(batchDir, "." + target.getName + ".keys"), batch)
       java.nio.file.Files.move(tmp.toPath, target.toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)

@@ -67,15 +67,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *                                    range-query grid (batch q100's
   *                                    defaults); --rate-ttl retires sealed
   *                                    cells
-  *     [--state-changelog]            RocksDB changelog checkpointing for
-  *                                    the analytics state stores: commit
-  *                                    uploads the delta, snapshots go
-  *                                    async. The SURVEY §6.7 study's
-  *                                    conclusion — no win on local-disk
-  *                                    checkpoints (default stays off),
-  *                                    enable when --checkpoint points at a
-  *                                    remote DFS where full-snapshot
-  *                                    upload IS the commit latency
   *
   * That is all five reference flags (-firehose, -stream-name, -listen-addr,
   * -region, -write-interval) plus the Spark-side ingest/analytics
@@ -213,8 +204,6 @@ object RelayMain {
     if (analytics.nonEmpty) builder.config(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    if (args.contains("--state-changelog")) builder.config(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // main.go:88's startup line, same shape (JsonLog — the zap-parity
@@ -225,10 +214,10 @@ object RelayMain {
     val region = opts.getOrElse("--region", RecordSink.defaultRegion)
     val sink: RecordSink = opts.getOrElse("--delivery", "at-most-once") match {
       case "exactly-once" =>
-        new ExactlyOnceFileSink(outDir, streamName, firehose, region)
-      case "at-most-once" =>
-        if (firehose) new FirehoseFileSink(outDir, streamName, region)
-        else new KinesisFileSink(outDir, streamName, region)
+        new ExactlyOnceFileSink(outDir, streamName, region)
+      // --firehose drops the keys in RelayPipeline.deliver; the sinks
+      // record whatever keys arrive
+      case "at-most-once" => new KinesisFileSink(outDir, streamName, region)
       case other => sys.error(s"--delivery $other: expected at-most-once|exactly-once")
     }
     val trigger =

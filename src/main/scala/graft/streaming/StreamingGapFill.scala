@@ -37,11 +37,6 @@ object StreamingGapFill {
   // every other streaming state class uses (see StreamingAsOf).
   private[streaming] final case class LastSample(tsUs: Long, value: Double)
 
-  /** Exactly Spark SQL's `round(x, 6) + 0.0`. */
-  private def round6(x: Double): Double =
-    new java.math.BigDecimal(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
-
   private final class GapProcessor(step: Long)
       extends ValueStateFold[String, SeriesSample, LastSample, GridFill](
         "last", Encoders.product[LastSample], TTLConfig.NONE) {
@@ -54,7 +49,7 @@ object StreamingGapFill {
         if (s == null) {
           // batch's grid starts at ceil(first sample): only an exactly
           // aligned first sample carries a grid point of its own
-          if (r.tsUs % step == 0) emit(GridFill(key, r.tsUs, round6(r.value)))
+          if (r.tsUs % step == 0) emit(GridFill(key, r.tsUs, Rounding.r6(r.value)))
           s = LastSample(r.tsUs, r.value)
         } else if (r.tsUs > s.tsUs) {
           var g = (s.tsUs / step + 1) * step // first aligned point after prev
@@ -63,7 +58,7 @@ object StreamingGapFill {
               if (g == r.tsUs) r.value // on-sample: exact, batch's pt = tus rule
               else s.value + (r.value - s.value) *
                 ((g - s.tsUs).toDouble / (r.tsUs - s.tsUs).toDouble)
-            emit(GridFill(key, g, round6(v)))
+            emit(GridFill(key, g, Rounding.r6(v)))
             g += step
           }
           s = LastSample(r.tsUs, r.value)

@@ -33,13 +33,13 @@ final case class HwUpdate(
   * equality asserted in the spec's real-testdata parity case, not an
   * epsilon).
   *
-  * Ordering contract (the house rule, same as [[StreamingRate]]): rows
-  * inside a micro-batch are sorted by (ts, value) — the batch array's own
-  * sort; rows arriving in a later batch strictly behind the high-water
-  * mark cannot be spliced into an already-folded recurrence (unlike the
-  * commutative co-moment sums of [[StreamingPredictLinear]], this fold is
-  * order-SENSITIVE), so they count in `n_late` and are excluded. Feed a
-  * watermarked stream and `n_late` stays 0.
+  * Ordering contract (the late test of the [[Counter]] rule, README
+  * "Counter rule"): rows inside a micro-batch are sorted by (ts, value) —
+  * the batch array's own sort; rows arriving in a later batch behind the
+  * high-water mark cannot be spliced into an already-folded recurrence
+  * (unlike the commutative co-moment sums of [[StreamingPredictLinear]],
+  * this fold is order-SENSITIVE), so they count in `n_late` and are
+  * excluded. Feed a watermarked stream and `n_late` stays 0.
   *
   * The smoothing constants arrive as EXPLICIT pairs (sf, csf) and
   * (tf, ctf) rather than computing 1−sf at runtime: the batch side spells
@@ -61,9 +61,7 @@ object StreamingHoltWinters {
                        emit: HwUpdate => Unit) = {
       var s = s0
       rows.toArray.sortBy(s => (s.tsUs, s.value)).foreach { r =>
-        val late = s.n > 0L && (r.tsUs < s.lastTsUs ||
-          (r.tsUs == s.lastTsUs && r.value < s.lastValue))
-        if (late) {
+        if (s.n > 0L && Counter.late(r.tsUs, r.value, s.lastTsUs, s.lastValue)) {
           s = s.copy(nLate = s.nLate + 1)
         } else if (s.n == 0L) {
           // seed: level = first sample, trend unset (the batch fold's zero)

@@ -37,9 +37,9 @@ final case class GridCell(n: Long, sumInc: Double)
   * per-metric object, PromQL's natural sharding; same single-operator
   * rationale as [[StreamingTopkRate]] — chaining a per-series stateful op
   * into a per-step one is unsupported in update mode) holding:
-  *   - `series`: user → newest (second, value) — the delta anchor, with
-  *     the family's (ts, value) high-water-mark lateness rule, here on
-  *     SECONDS to reproduce the batch q100 window order exactly;
+  *   - `series`: user → newest (second, value) — the delta anchor of the
+  *     [[Counter]] rule (README, "Counter rule"), here on floored SECONDS
+  *     to reproduce the batch q100 window order exactly;
   *   - `grid`: (step, user) → (n samples, Σ increase) — per-cell, not
   *     per-step, because `n_series` is a DISTINCT count: a step's series
   *     count is its live cell count, exact, never approximated.
@@ -74,36 +74,24 @@ object StreamingRangeEval {
         timers: TimerValues): Iterator[RangeGridPoint] = {
       // batch q100 works on floored SECONDS ordered by (tsec, value) —
       // identical fold order here or parity breaks on same-second scrapes
-      val batch = rows.toArray
-        .map(s => (s.user_id, Math.floorDiv(s.tsUs, 1000000L), s.value))
-        .sortBy(identity)
+      val batch = rows.map(s => (s.user_id, Math.floorDiv(s.tsUs, 1000000L), s.value))
+        .toSeq.sortBy(identity)
       val touched = scala.collection.mutable.Set.empty[Long]
-      var i = 0
-      while (i < batch.length) {
-        val sid = batch(i)._1
-        var st = if (series.containsKey(sid)) series.getValue(sid) else null
-        while (i < batch.length && batch(i)._1 == sid) {
-          val (_, tsec, v) = batch(i)
-          if (st == null) {
-            st = GridSeriesState(tsec, v) // first sample: anchors, no delta
-          } else if (tsec > st.lastTsec ||
-              (tsec == st.lastTsec && v >= st.lastValue)) {
-            val delta = v - st.lastValue
-            val inc = if (delta < 0) v else delta // counter reset
-            var s0 = Math.floorDiv(tsec + stepSec - 1, stepSec) * stepSec
-            val s1 = Math.floorDiv(tsec + windowSec, stepSec) * stepSec
-            while (s0 <= s1) {
-              val ck = GridCellKey(s0, sid)
-              val cell = if (grid.containsKey(ck)) grid.getValue(ck) else GridCell(0L, 0.0)
-              grid.updateValue(ck, GridCell(cell.n + 1L, cell.sumInc + inc))
-              touched += s0
-              s0 += stepSec
-            }
-            st = GridSeriesState(tsec, v)
-          } // else: strictly behind the (tsec, value) hwm — late, dropped
-          i += 1
-        }
-        series.updateValue(sid, st)
+      KeyedState.foldEntries(series, batch)(_._1) {
+        case (None, (_, tsec, v)) => GridSeriesState(tsec, v) // anchors, no delta
+        case (Some(st), (_, tsec, v)) if Counter.late(tsec, v, st.lastTsec, st.lastValue) => st
+        case (Some(st), (sid, tsec, v)) =>
+          val inc = Counter.increase(st.lastValue, v)
+          var s0 = Math.floorDiv(tsec + stepSec - 1, stepSec) * stepSec
+          val s1 = Math.floorDiv(tsec + windowSec, stepSec) * stepSec
+          while (s0 <= s1) {
+            val ck = GridCellKey(s0, sid)
+            val cell = KeyedState.entry(grid, ck).getOrElse(GridCell(0L, 0.0))
+            grid.updateValue(ck, GridCell(cell.n + 1L, cell.sumInc + inc))
+            touched += s0
+            s0 += stepSec
+          }
+          GridSeriesState(tsec, v)
       }
       if (touched.isEmpty) return Iterator.empty
       // one scan of the metric's grid: fold the touched steps' cells

@@ -30,9 +30,9 @@ final case class BufferedSample(tsUs: Long, value: Double)
   * scrape is ≤ 21 samples regardless of how long the job runs).
   *
   * Increase and span are computed over IN-WINDOW samples only — exactly
-  * PromQL's `rate(m[w])`, which ignores everything before `t − w`; counter
-  * resets between consecutive in-window samples contribute the post-reset
-  * value, as in the batch q82 pipeline and [[StreamingRate]]. The buffer
+  * PromQL's `rate(m[w])`, which ignores everything before `t − w`; the
+  * increase and the rate are the [[Counter]] rule's (README, "Counter
+  * rule"), as in the batch q82 pipeline and [[StreamingRate]]. The buffer
   * is evicted strictly to the window: the newest sample only moves the
   * window forward, so an evicted sample can never re-enter a later window.
   *
@@ -64,15 +64,11 @@ object StreamingRangeRate {
       // evict strictly to the window — only in-window samples carry meaning
       val inWindow = merged.filter(_.tsUs > windowStart)
       buf.put(inWindow.toArray)
-      val increase = inWindow.iterator.sliding(2).withPartial(false).map { pair =>
-        val d = pair(1).value - pair(0).value
-        if (d < 0) pair(1).value else d // counter reset inside the window
-      }.sum
-      val spanUs = inWindow.last.tsUs - inWindow.head.tsUs
-      val rate = if (inWindow.length >= 2 && spanUs > 0L)
-        Some(Rounding.r6(increase / (spanUs / 1e6))) else None
+      val increase = inWindow.iterator.sliding(2).withPartial(false)
+        .map(pair => Counter.increase(pair(0).value, pair(1).value)).sum
+      // one in-window sample spans 0 µs, so it has no rate
       Iterator.single(RangeRate(key._1, key._2, merged.last.tsUs, inWindow.length.toLong,
-        Rounding.r2(increase), rate))
+        Rounding.r2(increase), Counter.rate(increase, inWindow.last.tsUs - inWindow.head.tsUs)))
     }
   }
 

@@ -50,22 +50,20 @@ final case class RateBaseline(
   * backend a large deployment runs anyway, see `RocksDbStateStoreSpec`).
   *
   * Semantics (identical to batch, PromQL's extrapolation-free core rule):
-  * within a series ordered by (ts, value), delta = v − v_prev; a negative
-  * delta means the counter restarted near 0, so the increase contributed is
-  * the full new value. The per-series state is ONE previous sample plus
-  * running totals — O(active series) state, not O(samples).
+  * the [[Counter]] rule (README, "Counter rule") — reset-corrected
+  * increases along the (ts, value) order, rates only over a positive span.
+  * The per-series state is ONE previous sample plus running totals —
+  * O(active series) state, not O(samples).
   *
   * Ordering contract: rows inside a micro-batch are sorted here (event
   * order within a batch is not guaranteed); rows that arrive in a LATER
-  * batch strictly behind the state's (ts, value) high-water mark — the
-  * exact order the batch window sorts by — cannot be spliced into an
-  * already-consumed delta sequence; they are counted in `n_late` and
-  * excluded, mirroring how the engine itself drops late rows behind a
-  * watermark. A row AT the high-water timestamp with value ≥ the last
-  * value extends the (ts, value) order and is consumed normally (delta 0
-  * for an exact duplicate), so duplicate-timestamp scrapes produce the
-  * same n_samples/total_increase as the batch pipeline over the same
-  * rows. Feed the operator a watermarked stream and `n_late` stays 0.
+  * batch behind the state's (ts, value) high-water mark cannot be spliced
+  * into an already-consumed delta sequence; they are counted in `n_late`
+  * and excluded, mirroring how the engine itself drops late rows behind a
+  * watermark. An exact duplicate of the newest sample is consumed with
+  * delta 0, so duplicate-timestamp scrapes produce the same
+  * n_samples/total_increase as the batch pipeline over the same rows.
+  * Feed the operator a watermarked stream and `n_late` stays 0.
   *
   * Scale: state lives in the (RocksDB) state store hash-partitioned by
   * series key — a 1000-executor job holds each series' last sample exactly
@@ -101,34 +99,23 @@ object StreamingRate {
       var s = if (state.exists()) state.get()
               else RateState(-1L, -1L, 0.0, 0L, 0L, 0L, 0.0, -1L, 0.0)
       batch.foreach { r =>
-        // late = strictly behind the (ts, value) high-water mark, the batch
-        // window's own sort order: an equal-ts row with value ≥ lastValue is
-        // the NEXT element of that order, not a splice into the past
-        val late = s.nSamples > 0L && (r.tsUs < s.lastTsUs ||
-          (r.tsUs == s.lastTsUs && r.value < s.lastValue))
-        if (late) {
+        if (s.nSamples > 0L && Counter.late(r.tsUs, r.value, s.lastTsUs, s.lastValue)) {
           s = s.copy(nLate = s.nLate + 1)
         } else if (s.nSamples == 0L) {
           s = RateState(r.tsUs, r.tsUs, r.value, 1L, 0L, s.nLate, 0.0, -1L, 0.0)
         } else {
-          val delta = r.value - s.lastValue
-          val reset = delta < 0
+          val inc = Counter.increase(s.lastValue, r.value)
           s = s.copy(
             lastTsUs = r.tsUs, lastValue = r.value, nSamples = s.nSamples + 1,
-            nResets = s.nResets + (if (reset) 1L else 0L),
-            totalIncrease = s.totalIncrease + (if (reset) r.value else delta),
-            lastDtUs = r.tsUs - s.lastTsUs,
-            lastInc = if (reset) r.value else delta)
+            nResets = s.nResets + (if (Counter.reset(s.lastValue, r.value)) 1L else 0L),
+            totalIncrease = s.totalIncrease + inc, lastDtUs = r.tsUs - s.lastTsUs,
+            lastInc = inc)
         }
       }
       state.update(s)
-      val dtUs = s.lastTsUs - s.firstTsUs
-      val rate = if (dtUs > 0L)
-        Some(Rounding.r6(s.totalIncrease / (dtUs / 1e6))) else None
-      val irate = if (s.lastDtUs > 0L)
-        Some(Rounding.r6(s.lastInc / (s.lastDtUs / 1e6))) else None
       Iterator.single(RateTotals(key._1, key._2, s.nSamples, s.nResets, s.nLate,
-        Rounding.r2(s.totalIncrease), rate, irate))
+        Rounding.r2(s.totalIncrease), Counter.rate(s.totalIncrease, s.lastTsUs - s.firstTsUs),
+        Counter.rate(s.lastInc, s.lastDtUs)))
     }
   }
 

@@ -43,10 +43,11 @@ final case class TokenDriftScore(group: String, pane: Long, n_ref: Long,
   * regardless of stream length; per micro-batch the store sees one
   * read/write per distinct (pane-open) token. Pane sealing and the
   * late-row contract (a row behind the open pane counts as late and
-  * drops) follow [[StreamingDrift]]/[[StreamingMeanShift]]. `relearnPanes`
-  * re-baselines the reference from a scored pane once the reference epoch
-  * is that old — the scored pane ALWAYS scores against the old reference
-  * first, so a regime change alarms before it becomes the new normal. */
+  * drops) are [[KeyedState.sealLoop]]'s, the daily twins' loop.
+  * `relearnPanes` re-baselines the reference from a scored pane once the
+  * reference epoch is that old — the scored pane ALWAYS scores against the
+  * old reference first, so a regime change alarms before it becomes the
+  * new normal. */
 object StreamingTokenDrift {
 
   // java.math.BigDecimal.valueOf = Spark Round's own double path (the
@@ -55,10 +56,6 @@ object StreamingTokenDrift {
   private[streaming] def quantize(v: Double): Long =
     java.math.BigDecimal.valueOf(v)
       .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
-
-  private[streaming] def round6(v: Double): Double =
-    java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   private final class TokenDriftProcessor(capacity: Int, relearnPanes: Option[Int])
       extends StatefulProcessor[String, VocabArrival, TokenDriftScore] {
@@ -99,57 +96,51 @@ object StreamingTokenDrift {
       }
       keys.foreach(t => term(refMap.getOrElse(t, 0L), curMap.getOrElse(t, 0L)))
       if (m.refOther > 0 || m.curOther > 0) term(m.refOther, m.curOther)
-      val jsd = round6((sp.toDouble / 1e6 / atot + sq.toDouble / 1e6 / btot) / 2)
+      val jsd = Rounding.r6((sp.toDouble / 1e6 / atot + sq.toDouble / 1e6 / btot) / 2)
       TokenDriftScore(key, pane, atot, btot, nTypes, jsd,
         m.refOther > 0 || m.curOther > 0)
     }
 
-    /** cur → ref (the maps are ≤ capacity entries; seals are per-pane). */
-    private def adoptCurAsRef(): Unit = {
-      ref.iterator().map(_._1).toList.foreach(ref.removeKey)
-      cur.iterator().foreach { case (t, c) => ref.updateValue(t, c) }
+    /** Seals the open pane: the first sealed pane becomes the reference; a
+      * later one scores against it, and replaces it once the reference
+      * epoch is `relearnPanes` old. */
+    private def seal(key: String, m: TokenDriftMeta,
+                     emit: TokenDriftScore => Unit): TokenDriftMeta = {
+      val first = m.refPane == Long.MinValue
+      if (!first) emit(score(key, m.curPane, m))
+      val adopt = first || relearnPanes.exists(p => m.curPane - m.refPane >= p)
+      if (adopt) { // cur → ref (the maps are ≤ capacity entries)
+        ref.iterator().map(_._1).toList.foreach(ref.removeKey)
+        cur.iterator().foreach { case (t, c) => ref.updateValue(t, c) }
+      }
+      cur.iterator().map(_._1).toList.foreach(cur.removeKey)
+      (if (adopt) m.copy(refPane = m.curPane, refOther = m.curOther, refSize = m.curSize)
+       else m).copy(curOther = 0L, curSize = 0L)
     }
 
-    private def clearCur(): Unit =
-      cur.iterator().map(_._1).toList.foreach(cur.removeKey)
+    private def enter(m0: TokenDriftMeta, pane: Long, token: String): TokenDriftMeta = {
+      val m = m0.copy(curPane = pane)
+      if (cur.containsKey(token)) {
+        cur.updateValue(token, cur.getValue(token) + 1L)
+        m
+      } else if (m.curSize < capacity) {
+        cur.updateValue(token, 1L)
+        m.copy(curSize = m.curSize + 1)
+      } else m.copy(curOther = m.curOther + 1L)
+    }
 
     override def handleInputRows(
         key: String, rows: Iterator[VocabArrival],
         timers: TimerValues): Iterator[TokenDriftScore] = {
-      var m = if (meta.exists()) meta.get()
-              else TokenDriftMeta(Long.MinValue, Long.MinValue, 0L, 0L, 0L, 0L, 0L)
       val out = Seq.newBuilder[TokenDriftScore]
       // pane-ascending, token-grouped apply order (counts are commutative;
       // the sort only makes pane transitions deterministic)
-      rows.toArray.sortBy(r => (r.batch, r.token)).foreach { r =>
-        if (r.batch < m.curPane) m = m.copy(nLate = m.nLate + 1)
-        else {
-          if (r.batch > m.curPane && m.curPane != Long.MinValue) {
-            if (m.refPane == Long.MinValue) {
-              adoptCurAsRef()
-              m = m.copy(refPane = m.curPane, refOther = m.curOther,
-                refSize = m.curSize)
-            } else {
-              out += score(key, m.curPane, m)
-              if (relearnPanes.exists(p => m.curPane - m.refPane >= p)) {
-                adoptCurAsRef()
-                m = m.copy(refPane = m.curPane, refOther = m.curOther,
-                  refSize = m.curSize)
-              }
-            }
-            clearCur()
-            m = m.copy(curOther = 0L, curSize = 0L)
-          }
-          m = m.copy(curPane = r.batch)
-          if (cur.containsKey(r.token))
-            cur.updateValue(r.token, cur.getValue(r.token) + 1L)
-          else if (m.curSize < capacity) {
-            cur.updateValue(r.token, 1L)
-            m = m.copy(curSize = m.curSize + 1)
-          } else m = m.copy(curOther = m.curOther + 1L)
-        }
-      }
-      meta.update(m)
+      meta.update(KeyedState.sealLoop(
+        if (meta.exists()) meta.get()
+        else TokenDriftMeta(Long.MinValue, Long.MinValue, 0L, 0L, 0L, 0L, 0L),
+        rows.toSeq.sortBy(r => (r.batch, r.token)))(_.batch, _.curPane)(
+        m => m.copy(nLate = m.nLate + 1), seal(key, _, out += _),
+        (m, pane, r) => enter(m, pane, r.token)))
       out.result().iterator
     }
   }

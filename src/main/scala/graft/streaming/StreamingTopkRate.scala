@@ -23,9 +23,8 @@ final case class TopkRate(name: String, user_id: Long, rate_per_sec: Double, ran
   * actually watches ("which series of this metric are hottest right
   * now"). One `transformWithState` processor keyed by METRIC NAME holding
   * a `MapState[series → SeriesRateState]`: samples fold into per-series
-  * cumulative rate exactly like [[StreamingRate]] (same (ts, value)
-  * high-water-mark lateness rule, same counter-reset rule, same
-  * sum(dt)>0 guard), and each touched micro-batch re-emits the metric's
+  * cumulative rate by the [[Counter]] rule (README, "Counter rule"), as in
+  * [[StreamingRate]], and each touched micro-batch re-emits the metric's
   * current top-k by rate (ties: series id ascending, the q83 order).
   *
   * Single-operator design, deliberately: ranking needs all of a metric's
@@ -56,31 +55,15 @@ object StreamingTopkRate {
         timers: TimerValues): Iterator[TopkRate] = {
       // per-series (ts, value) order inside the batch — the q82/q83 window
       // order, so the fold reproduces the batch pipeline exactly
-      val batch = rows.toArray.sortBy(s => (s.user_id, s.tsUs, s.value))
-      var i = 0
-      while (i < batch.length) {
-        val sid = batch(i).user_id
-        var st = if (series.containsKey(sid)) series.getValue(sid) else null
-        while (i < batch.length && batch(i).user_id == sid) {
-          val r = batch(i)
-          if (st == null) {
-            st = SeriesRateState(r.tsUs, r.tsUs, r.value, 0.0)
-          } else if (r.tsUs > st.lastTsUs ||
-              (r.tsUs == st.lastTsUs && r.value >= st.lastValue)) {
-            val delta = r.value - st.lastValue
-            st = SeriesRateState(st.firstTsUs, r.tsUs, r.value,
-              st.totalIncrease + (if (delta < 0) r.value else delta))
-          } // else: strictly behind the (ts, value) hwm — late, skipped
-          i += 1
-        }
-        series.updateValue(sid, st)
+      KeyedState.foldEntries(series, rows.toSeq.sortBy(s => (s.tsUs, s.value)))(_.user_id) {
+        case (None, r) => SeriesRateState(r.tsUs, r.tsUs, r.value, 0.0)
+        case (Some(st), r) if Counter.late(r.tsUs, r.value, st.lastTsUs, st.lastValue) => st
+        case (Some(st), r) => SeriesRateState(st.firstTsUs, r.tsUs, r.value,
+          st.totalIncrease + Counter.increase(st.lastValue, r.value))
       }
       // snapshot: current top-k by rate (desc), ties by series id (asc)
       val ranked = series.iterator().flatMap { case (sid, st) =>
-        val dtUs = st.lastTsUs - st.firstTsUs
-        if (dtUs > 0L)
-          Some(sid -> Rounding.r6(st.totalIncrease / (dtUs / 1e6)))
-        else None
+        Counter.rate(st.totalIncrease, st.lastTsUs - st.firstTsUs).map(sid -> _)
       }.toVector.sortBy { case (sid, rate) => (-rate, sid) }.take(k)
       ranked.iterator.zipWithIndex.map { case ((sid, rate), idx) =>
         TopkRate(name, sid, rate, idx + 1)

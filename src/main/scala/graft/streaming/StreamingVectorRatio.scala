@@ -29,11 +29,11 @@ final case class RatioUpdate(
   * batch pivot. Inner-join drop falls out naturally — the ratio is None
   * until both sides have a defined rate.
   *
-  * Per-side semantics are the q82/q99 cumulative rate (reset rule,
-  * (ts, value) high-water-mark lateness, sum(dt)>0 guard), with each
-  * side rounded before dividing exactly as the batch does — pinned to
-  * the oracle-checked q99 by a real-testdata parity case. State is two
-  * fixed-size entries per ACTIVE key, TTL-evictable. */
+  * Per-side semantics are the q82/q99 cumulative rate by the [[Counter]]
+  * rule (README, "Counter rule"), with each side rounded before dividing
+  * exactly as the batch does — pinned to the oracle-checked q99 by a
+  * real-testdata parity case. State is two fixed-size entries per ACTIVE
+  * key, TTL-evictable. */
 object StreamingVectorRatio {
 
   private final class RatioProcessor(num: String, den: String, ttl: TTLConfig)
@@ -44,40 +44,19 @@ object StreamingVectorRatio {
       sides = getHandle.getMapState[String, SideState](
         "sides", Encoders.STRING, Encoders.product[SideState], ttl)
 
-    private def fold(s0: Option[SideState], rows: Seq[CounterSample]): SideState = {
-      var s = s0.getOrElse(SideState(-1L, -1L, 0.0, 0L, 0.0))
-      rows.foreach { r =>
-        val late = s.nSamples > 0L && (r.tsUs < s.lastTsUs ||
-          (r.tsUs == s.lastTsUs && r.value < s.lastValue))
-        if (!late) {
-          if (s.nSamples == 0L) s = SideState(r.tsUs, r.tsUs, r.value, 1L, 0.0)
-          else {
-            val delta = r.value - s.lastValue
-            s = SideState(s.firstTsUs, r.tsUs, r.value, s.nSamples + 1,
-              s.totalIncrease + (if (delta < 0) r.value else delta))
-          }
-        }
-      }
-      s
-    }
-
-    private def rate(s: Option[SideState]): Option[Double] = s.flatMap { v =>
-      val dtUs = v.lastTsUs - v.firstTsUs
-      if (dtUs > 0L) Some(Rounding.r6(v.totalIncrease / (dtUs / 1e6))) else None
-    }
-
     override def handleInputRows(
         key: Long, rows: Iterator[CounterSample],
         timers: TimerValues): Iterator[RatioUpdate] = {
-      val batch = rows.toArray.sortBy(s => (s.tsUs, s.value))
-      batch.groupBy(_.name).foreach { case (name, group) =>
-        if (name == num || name == den) {
-          val prev = if (sides.containsKey(name)) Some(sides.getValue(name)) else None
-          sides.updateValue(name, fold(prev, group.toSeq))
-        }
+      KeyedState.foldEntries(sides, rows.toSeq.sortBy(s => (s.tsUs, s.value)))(_.name) {
+        case (None, r) => SideState(r.tsUs, r.tsUs, r.value, 1L, 0.0)
+        case (Some(s), r) if Counter.late(r.tsUs, r.value, s.lastTsUs, s.lastValue) => s
+        case (Some(s), r) => SideState(s.firstTsUs, r.tsUs, r.value, s.nSamples + 1,
+          s.totalIncrease + Counter.increase(s.lastValue, r.value))
       }
-      val e = rate(if (sides.containsKey(num)) Some(sides.getValue(num)) else None)
-      val c = rate(if (sides.containsKey(den)) Some(sides.getValue(den)) else None)
+      def rate(side: String) = KeyedState.entry(sides, side)
+        .flatMap(s => Counter.rate(s.totalIncrease, s.lastTsUs - s.firstTsUs))
+      val e = rate(num)
+      val c = rate(den)
       val ratio = for (ev <- e; cv <- c) yield Rounding.r6(ev / cv)
       Iterator.single(RatioUpdate(key, e, c, ratio))
     }

@@ -113,6 +113,18 @@ class ExactlyOnceSinkSpec extends AnyFunSuite {
     assert(dataLines(Paths.get(dir, "metrics", "batch=0")) === 600)
   }
 
+  test("firehose delivery leaves keys sidecars that hold only null") {
+    val dir = Files.createTempDirectory("eo-firehose-").toString
+    val sink = new ExactlyOnceFileSink(dir, "metrics")
+    RelayPipeline.deliver(records(50).coalesce(2), sink, firehose = true, batchId = 3L)
+    import scala.jdk.CollectionConverters._
+    val sidecars = Files.list(Paths.get(dir, "metrics", "batch=3")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".keys")).toSeq
+    assert(sidecars.nonEmpty)
+    val keys = sidecars.flatMap(p => Files.readAllLines(p).asScala)
+    assert(keys.size === 50 && keys.forall(_ == "null"), keys.distinct)
+  }
+
   test("the coordinate-free send path is refused, not silently duplicated") {
     val sink = new ExactlyOnceFileSink("/tmp/unused", "metrics")
     intercept[UnsupportedOperationException](

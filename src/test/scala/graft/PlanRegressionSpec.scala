@@ -51,6 +51,16 @@ class PlanRegressionSpec extends AnyFunSuite {
     assert(PlanHash.repeatedSubtrees(good.queryExecution.optimizedPlan).isEmpty)
   }
 
+  test("PlanHash.canonical drops an RDD's call site, not its plan node") {
+    def scan(node: String, line: Int) =
+      s"(1) $node\nOutput [1]: [nat#175]\nArguments: [nat#175], MapPartitionsRDD[28] " +
+        s"at localCheckpoint at Dedup.scala:$line, ExistingRDD, UnknownPartitioning(0)"
+    assert(PlanHash.canonical(scan("Scan ExistingRDD", 1078)) ===
+      PlanHash.canonical(scan("Scan ExistingRDD", 1070)))
+    assert(PlanHash.canonical(scan("Scan ExistingRDD", 1078)) !==
+      PlanHash.canonical(scan("Scan OneRowRelation", 1078)))
+  }
+
   test("pre-r10 join family: equi-join physical forms only — no accidental " +
       "CartesianProduct or BroadcastNestedLoopJoin (r20 fresh-eyes pins; " +
       "q15 is the DECLARED cross join and q44's broadcast probes are by design)") {

@@ -288,11 +288,11 @@ class RelayAnalyticsModesSpec extends AnyFunSuite {
     }
   }
 
-  test("--state-changelog: rate mode runs and restarts with changelog checkpointing on") {
+  test("changelog checkpointing: rate mode runs and restarts") {
     withRocksDb {
-      // the deployment knob RelayMain plumbs for remote checkpoint dirs
-      // (SURVEY §6.7 study): delta-upload commits must survive a restart
-      // exactly like full-snapshot commits
+      // Spark's own key, for remote checkpoint dirs (SURVEY §6.7 study):
+      // delta-upload commits must survive a restart exactly like
+      // full-snapshot commits
       val key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
       val prev = spark.conf.getOption(key)
       spark.conf.set(key, "true")
@@ -326,9 +326,9 @@ class RelayAnalyticsModesSpec extends AnyFunSuite {
     }
   }
 
-  test("--state-changelog: two drains over one checkpoint give the snapshot-mode rate totals") {
-    // RelayMain --state-changelog sets this key on the session builder; each
-    // side runs on a session of its own, with RocksDB like RelayMain
+  test("changelog checkpointing: two drains give snapshot-mode rate totals") {
+    // a deployment passes this Spark key as --conf; each side runs on a
+    // session of its own, with RocksDB like RelayMain
     def session(changelog: Boolean) = {
       val s = spark.newSession()
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
